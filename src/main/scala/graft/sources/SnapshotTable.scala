@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets.UTF_8
@@ -86,7 +87,17 @@ object SnapshotTable {
     * declared, or an all-null column; absent stats always mean "keep
     * this file" to the pruner), and its per-column bloom fingerprints
     * (same absence discipline: no bloom ⇒ the file always survives
-    * key pruning). */
+    * key pruning).
+    *
+    * `schema` is the file's Spark schema as parquet schema inference
+    * reads it from the footer, recorded at commit from the footer the
+    * row census already opens. Reads pass the merge of their entries'
+    * schemas to the scan, so building a read plans no Spark job. In a
+    * segment file the distinct schemas are stored once, as a
+    * `schemas` list of Spark type JSON, and each entry names its own
+    * by index (`"schema": i`). None = an entry decoded from a manifest
+    * written before schemas were recorded; reads fall back to a
+    * driver-side footer read of that file. */
   private[graft] final case class Entry(
       path: String,
       stats: Map[String, FileStat],
@@ -94,7 +105,8 @@ object SnapshotTable {
       sidecarBloomCols: Set[String] = Set.empty,
       rows: Long = -1L,
       seq: Long = 0L,
-      bytes: Long = -1L)
+      bytes: Long = -1L,
+      schema: Option[StructType] = None)
 
   /** One merge-on-read EQUALITY DELETE: `paths` name delta-sized
     * parquet files holding the doomed key tuples (columns =
@@ -120,10 +132,18 @@ object SnapshotTable {
     * DVs by subtracting `rows`, the fast path equality deletes must
     * refuse. `tryPublish` trims a DV against the surviving entry list,
     * so a rewriting commit (compaction) that folds some of its files
-    * can never leave the count double-subtracting. */
+    * can never leave the count double-subtracting.
+    *
+    * `schema` is the Spark schema of an equality delete's files,
+    * recorded when they are written and stored in the manifest as
+    * Spark type JSON (`"schema"`), so reading the keys plans no Spark
+    * job. A delete vector records none: its files always hold
+    * [[DvSchema]]. None on an equality delete = one decoded from a
+    * manifest written before schemas were recorded; its files'
+    * footers are read on the driver instead. */
   private[graft] final case class DeleteFile(
       paths: Seq[String], keyCols: Seq[String], seq: Long, rows: Long = -1L,
-      dvFiles: Seq[(String, Long)] = Nil)
+      dvFiles: Seq[(String, Long)] = Nil, schema: Option[StructType] = None)
 
   /** Reserved column names of the delete-vector position frames (and
     * the read-time helper columns that apply them). The prefix is
@@ -132,6 +152,9 @@ object SnapshotTable {
   private[graft] val DvPosCol = "__graft_dv_pos"
   private[graft] val DvNameCol = "__graft_dv_name"
   private[graft] def isDv(d: DeleteFile): Boolean = d.keyCols == Seq(DvPosCol)
+  /** The schema of every delete-vector file (as read back: nullable). */
+  private val DvSchema = StructType(Seq(
+    StructField(DvNameCol, StringType), StructField(DvPosCol, LongType)))
   private def fileName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
   /** One COLUMN RENAME, seq-scoped like the deletes: it applies to
@@ -298,8 +321,8 @@ object SnapshotTable {
 
   /** Inject every live added column the scanned files don't carry as
     * a typed NULL — the read-side face of ALTER TABLE ADD COLUMN.
-    * Once any post-add file carries the column physically, mergeSchema
-    * surfaces it and this is a no-op. */
+    * Once any post-add file carries the column physically, the merged
+    * read schema surfaces it and this is a no-op. */
   private def withLiveAdds(df: DataFrame, m: Manifest): DataFrame =
     liveAdds(m).foldLeft(df) { case (d, (n, dt)) =>
       if (d.columns.contains(n)) d else d.withColumn(n, lit(null).cast(dt))
@@ -376,6 +399,7 @@ object SnapshotTable {
         d.keyCols.foreach(ks.add)
         dn.put("seq", d.seq)
         if (d.rows >= 0L) dn.put("rows", d.rows): Unit
+        d.schema.foreach(st => dn.put("schema", st.json))
         if (d.dvFiles.nonEmpty) {
           val fsArr = dn.putArray("dvFiles")
           d.dvFiles.foreach { case (p, n) =>
@@ -418,9 +442,11 @@ object SnapshotTable {
   }
 
   private def entryToNode(
-      es: com.fasterxml.jackson.databind.node.ArrayNode, e: Entry): Unit = {
+      es: com.fasterxml.jackson.databind.node.ArrayNode, e: Entry,
+      schemaIndex: StructType => Int): Unit = {
     val en = es.addObject()
     en.put("path", e.path)
+    e.schema.foreach(st => en.put("schema", schemaIndex(st)))
     if (e.rows >= 0L) en.put("rows", e.rows): Unit
     if (e.seq > 0L) en.put("seq", e.seq): Unit
     if (e.bytes >= 0L) en.put("bytes", e.bytes): Unit
@@ -447,7 +473,12 @@ object SnapshotTable {
     }
   }
 
-  private def nodeToEntry(en: com.fasterxml.jackson.databind.JsonNode): Entry = {
+  private def structFromJson(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  private def nodeToEntry(
+      en: com.fasterxml.jackson.databind.JsonNode,
+      schemas: IndexedSeq[StructType]): Entry = {
     val stats = Option(en.get("stats")).map { st =>
       val it = st.fields()
       val b = Map.newBuilder[String, FileStat]
@@ -475,13 +506,21 @@ object SnapshotTable {
     Entry(en.get("path").asText, stats, blooms, sidecars,
       Option(en.get("rows")).map(_.asLong).getOrElse(-1L),
       Option(en.get("seq")).map(_.asLong).getOrElse(0L),
-      Option(en.get("bytes")).map(_.asLong).getOrElse(-1L))
+      Option(en.get("bytes")).map(_.asLong).getOrElse(-1L),
+      Option(en.get("schema")).map(i => schemas(i.asInt)))
   }
 
+  /** A segment file: `entries`, plus `schemas`, each distinct entry
+    * schema once (entries refer to theirs by index). */
   private def renderSegment(entries: Seq[Entry]): String = {
     val root = mapper.createObjectNode()
+    val index = scala.collection.mutable.LinkedHashMap.empty[StructType, Int]
     val es = root.putArray("entries")
-    entries.foreach(entryToNode(es, _))
+    entries.foreach(entryToNode(es, _, st => index.getOrElseUpdate(st, index.size)))
+    if (index.nonEmpty) {
+      val ss = root.putArray("schemas")
+      index.keys.foreach(st => ss.add(st.json))
+    }
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
@@ -507,8 +546,12 @@ object SnapshotTable {
       val in = f.open(p)
       val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-      val a = mapper.readTree(body).get("entries")
-      val entries = (0 until a.size).map(a.get(_)).map(nodeToEntry)
+      val root = mapper.readTree(body)
+      val schemas = Option(root.get("schemas")).map { ss =>
+        (0 until ss.size).map(i => structFromJson(ss.get(i).asText))
+      }.getOrElse(IndexedSeq.empty)
+      val a = root.get("entries")
+      val entries = (0 until a.size).map(a.get(_)).map(nodeToEntry(_, schemas))
       segmentCache.put(key, entries)
       entries
     }
@@ -567,7 +610,7 @@ object SnapshotTable {
     val entries: Seq[Entry] =
       if (segments.nonEmpty) segments.flatMap(_.entries)
       else Option(root.get("entries")).map { a =>
-        (0 until a.size).map(a.get(_)).map(nodeToEntry)
+        (0 until a.size).map(a.get(_)).map(nodeToEntry(_, IndexedSeq.empty))
       }.getOrElse(Seq.empty)
     val deletes = Option(root.get("deletes")).map { a =>
       (0 until a.size).map { i =>
@@ -581,7 +624,8 @@ object SnapshotTable {
           }
         }.getOrElse(Seq.empty)
         DeleteFile(paths, keyCols, dn.get("seq").asLong,
-          Option(dn.get("rows")).map(_.asLong).getOrElse(-1L), dvFiles)
+          Option(dn.get("rows")).map(_.asLong).getOrElse(-1L), dvFiles,
+          Option(dn.get("schema")).map(n => structFromJson(n.asText)))
       }
     }.getOrElse(Seq.empty)
     val renames = Option(root.get("renames")).map { a =>
@@ -751,11 +795,6 @@ object SnapshotTable {
     entriesFrame(spark, dir, m, m.entries)
   }
 
-  /** A plain multi-file parquet scan over `entries` — mergeSchema
-    * gives additive evolution for free (a version whose batches carry
-    * different compatible schemas reads as their union, old rows null
-    * in the new columns; the footer pass is bounded by the file
-    * list). No delete application — the PHYSICAL rows. */
   /** Resolve a manifest-recorded path against the table dir. Paths
     * are dir-relative, except EXTERNAL absolute references — the
     * shallow clone's zero-copy sharing: a cloned manifest names the
@@ -770,9 +809,48 @@ object SnapshotTable {
   private[graft] def resolvePath(dir: String, p: String): String =
     resolve(dir, p)
 
+  /** The schema `mergeSchema` inference would give a scan of
+    * `entries`: their per-file schemas merged in path order — the
+    * union of compatible schemas, each field where it first appears.
+    * Built from the manifest, with no Spark job; an entry from a
+    * manifest written before schemas were recorded costs a
+    * driver-side read of its footer. */
+  private def entriesSchema(
+      spark: SparkSession, dir: String, entries: Seq[Entry]): StructType = {
+    val schemas = entries.map(e => e ->
+      e.schema.getOrElse(readFooter(spark, new Path(resolve(dir, e.path)))._2))
+    if (schemas.map(_._2).distinct.size == 1) schemas.head._2
+    else GraftParquetSchema.merge(spark, schemas
+      .sortBy { case (e, _) => qualifiedPath(spark, resolve(dir, e.path)) }
+      .map(_._2).distinct)
+  }
+
+  /** The schema of parquet files no manifest records yet (a batch
+    * just landed): their footers, merged like [[entriesSchema]]. */
+  private def filesSchema(spark: SparkSession, dir: String, paths: Seq[String]): StructType =
+    entriesSchema(spark, dir, paths.map(Entry(_, Map.empty)))
+
+  /** A plain multi-file parquet scan over `entries` under their merged
+    * recorded schema — additive evolution for free (a version whose
+    * batches carry different compatible schemas reads as their union,
+    * old rows null in the new columns) and no Spark job to plan it.
+    * No delete application — the PHYSICAL rows. */
   private def rawRead(spark: SparkSession, dir: String, entries: Seq[Entry]): DataFrame =
-    spark.read.option("mergeSchema", "true")
+    spark.read.schema(entriesSchema(spark, dir, entries))
       .parquet(entries.map(e => resolve(dir, e.path)): _*)
+
+  /** The position pairs of delete vector `d`. */
+  private def dvFrame(spark: SparkSession, dir: String, d: DeleteFile): DataFrame =
+    spark.read.schema(DvSchema).parquet(d.paths.map(p => resolve(dir, p)): _*)
+
+  /** The key tuples of equality delete `d`, under the names its
+    * commit recorded. Not de-duplicated: the key files are written
+    * distinct, and every consumer (anti/semi joins, the touched-file
+    * join) is duplicate-insensitive. */
+  private def deleteKeys(spark: SparkSession, dir: String, d: DeleteFile): DataFrame =
+    spark.read.schema(d.schema.getOrElse(filesSchema(spark, dir, d.paths)))
+      .parquet(d.paths.map(p => resolve(dir, p)): _*)
+      .select(d.keyCols.map(col): _*)
 
   private def applySchemaOps(
       df: DataFrame, ops: Seq[Either[Rename, Drop]]): DataFrame =
@@ -822,7 +900,9 @@ object SnapshotTable {
     * READER-GENERATED constants of the scan (no shuffle, no extra
     * data-column read); they are added only when a pending DV needs
     * them or the caller asks, and dropped before the frame surfaces
-    * unless asked for. */
+    * unless asked for. Every scan under the frame — data files, delete
+    * keys, delete vectors — reads with its manifest-recorded schema,
+    * so building the frame submits no Spark job. */
   private[graft] def entriesFrameMeta(
       spark: SparkSession, dir: String, m: Manifest, entries: Seq[Entry],
       keepMeta: Boolean): DataFrame = {
@@ -866,10 +946,7 @@ object SnapshotTable {
             val names = d.dvFiles.map(p => fileName(p._1)).toSet
             if (!es.exists(e => names.contains(fileName(e.path)))) df
             else {
-              val dvFrame = spark.read
-                .parquet(d.paths.map(p => resolve(dir, p)): _*)
-                .select(col(DvNameCol), col(DvPosCol))
-              df.join(dvFrame, Seq(DvNameCol, DvPosCol), "left_anti")
+              df.join(dvFrame(spark, dir, d), Seq(DvNameCol, DvPosCol), "left_anti")
             }
           } else {
             // the delete recorded its key columns under the names
@@ -881,11 +958,9 @@ object SnapshotTable {
             if (!cur.forall(df.columns.contains)) df
             else {
               val keyFrame = d.keyCols.zip(cur)
-                .foldLeft(spark.read
-                  .parquet(d.paths.map(p => resolve(dir, p)): _*)
-                  .select(d.keyCols.map(col): _*)) { case (kf, (o, n)) =>
+                .foldLeft(deleteKeys(spark, dir, d)) { case (kf, (o, n)) =>
                   if (o == n) kf else kf.withColumnRenamed(o, n)
-                }.distinct()
+                }
               df.join(keyFrame, cur, "left_anti")
             }
           }
@@ -1127,7 +1202,7 @@ object SnapshotTable {
       // names ABSOLUTE external entries, and "$dir/<abs>" would make
       // this probe throw inside the Try — which silently disabled ALL
       // planning-time pruning for clones (ADVICE r11)
-      val schema = spark.read.parquet(resolve(dir, all.head)).schema
+      val schema = rawRead(spark, dir, allEntries.take(1)).schema
       val empty = spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       empty.filter(predicate).queryExecution.analyzed.collectFirst {
@@ -1608,7 +1683,7 @@ object SnapshotTable {
       expectations: Seq[(String, String)]): Unit =
     if (expectations.nonEmpty && relPaths.nonEmpty)
       checkExpectations(
-        spark.read.parquet(relPaths.map(p => s"$dir/$p"): _*),
+        rawRead(spark, dir, relPaths.map(Entry(_, Map.empty))),
         expectations, dir)
 
   /** Declare-time validation: SETTING an expectation on a table with
@@ -1887,15 +1962,18 @@ object SnapshotTable {
   private[graft] def bucketStatKey(c: String, n: Int): String =
     s"__bucket:$c:$n"
 
-  /** Exact row count of one just-written parquet file from its FOOTER
-    * — a driver-side metadata read (what the production formats record
-    * at write time), so the per-commit file census never costs a Spark
-    * job. Delta-sized: called once per NEW file, never per table. */
-  private def footerRowCount(spark: SparkSession, p: Path): Long = {
+  /** Exact row count and Spark schema of one parquet file from its
+    * FOOTER — a driver-side metadata read (what the production formats
+    * record at write time), so the per-commit file census never costs
+    * a Spark job. Delta-sized: called once per NEW file, never per
+    * table (and per file of an older manifest that recorded no
+    * schema, at read time). */
+  private def readFooter(spark: SparkSession, p: Path): (Long, StructType) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(p, spark.sparkContext.hadoopConfiguration)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+    try (r.getRecordCount, GraftParquetSchema.fromFooter(spark, p, r.getFooter))
+    finally r.close()
   }
 
   private def batchEntries(
@@ -1904,24 +1982,22 @@ object SnapshotTable {
       bloomCols: Seq[String] = Nil, bloomFpp: Double = 0.01,
       bucket: Option[(String, Int)] = None): Seq[Entry] = {
     if (relPaths.isEmpty) return Seq.empty
-    // per-file row census from the parquet footers — exact, driver-side,
-    // no job; also what sizes the bloom aggregation buffers below
-    val rowsByRel: Map[String, Long] = relPaths.map { p =>
-      p -> footerRowCount(spark, new Path(s"$dir/$p"))
-    }.toMap
+    val f = fs(spark, dir)
+    // per-file row census and schema from the parquet footers — exact,
+    // driver-side, no job; the counts also size the bloom aggregation
+    // buffers below. bytes: one delta-sized getFileStatus per NEW file
+    // — planner statistics (auto-broadcast) read it from the manifest
+    // forever
+    val bare: Seq[Entry] = relPaths.map { p =>
+      val (rows, schema) = readFooter(spark, new Path(s"$dir/$p"))
+      val len = scala.util.Try(
+        f.getFileStatus(new Path(s"$dir/$p")).getLen).getOrElse(-1L)
+      Entry(p, Map.empty, rows = rows, bytes = len, schema = Some(schema))
+    }
     // plain commits (no declared stats/bloom/bucket columns) need no
     // read-back at all: entries are footer counts + file lengths
-    if (statsCols.isEmpty && bloomCols.isEmpty && bucket.isEmpty) {
-      val f = fs(spark, dir)
-      return relPaths.map { p =>
-        val len = scala.util.Try(
-          f.getFileStatus(new Path(s"$dir/$p")).getLen).getOrElse(-1L)
-        Entry(p, Map.empty, Map.empty, Set.empty,
-          rowsByRel.getOrElse(p, 0L), bytes = len)
-      }
-    }
-    val df0 = spark.read.option("mergeSchema", "true")
-      .parquet(relPaths.map(p => s"$dir/$p"): _*)
+    if (statsCols.isEmpty && bloomCols.isEmpty && bucket.isEmpty) return bare
+    val df0 = rawRead(spark, dir, bare)
     // the bucket id is DERIVED at stats time from the same murmur3
     // hash the write path partitioned on — never a physical column
     val df = bucket match {
@@ -1953,22 +2029,14 @@ object SnapshotTable {
     }
     // declared columns can all be absent from this batch's schema —
     // then there is nothing to aggregate and the footer census suffices
-    if (present.isEmpty && bloomPresent.isEmpty) {
-      val f = fs(spark, dir)
-      return relPaths.map { p =>
-        val len = scala.util.Try(
-          f.getFileStatus(new Path(s"$dir/$p")).getLen).getOrElse(-1L)
-        Entry(p, Map.empty, Map.empty, Set.empty,
-          rowsByRel.getOrElse(p, 0L), bytes = len)
-      }
-    }
+    if (present.isEmpty && bloomPresent.isEmpty) return bare
     // stats AND blooms ride ONE aggregation job (guide §1.2 — don't
     // read the batch back twice; the bloom buffers are sized from the
     // footer census, which the old second pass derived from the first)
     val bloomAggs =
       if (bloomPresent.isEmpty) Nil
       else {
-        val maxRows = rowsByRel.values.max.max(1L)
+        val maxRows = bare.map(_.rows).max.max(1L)
         require(maxRows <= 10_000_000L,
           s"a $maxRows-row file's bloom is a ~12 MB aggregation buffer — " +
             "write smaller data files (or raise bloomFpp) before declaring bloom columns")
@@ -2026,8 +2094,8 @@ object SnapshotTable {
           rp -> bloomPresent.map(c => c -> r.getAs[Array[Byte]](s"__bl_$c")).toMap
         }
       }.toMap
-    val f = fs(spark, dir)
-    relPaths.map { p =>
+    bare.map { e =>
+      val p = e.path
       val all = bloomsByRel.getOrElse(p, Map.empty)
       val (big, inline) = all.partition(_._2.length > InlineBloomMaxBytes)
       big.foreach { case (c, bytes) =>
@@ -2037,15 +2105,11 @@ object SnapshotTable {
       // row counts are the parquet footers' exact record counts —
       // a 0 there is a proven-empty census (unconditional prune,
       // vacuous all-match for DELETE; the empty seed file CREATE
-      // TABLE commits rides this).
-      // bytes: one delta-sized getFileStatus per NEW file — planner
-      // statistics (auto-broadcast) read it from the manifest forever
-      val len = scala.util.Try(
-        f.getFileStatus(new Path(s"$dir/$p")).getLen).getOrElse(-1L)
+      // TABLE commits rides this)
       val st = statsByRel.getOrElse(p, Map.empty)
       // a bucketed commit must land single-bucket files — a violation
       // here would let the SPJ scan claim a co-location that is false
-      if (bucket.isDefined && rowsByRel.getOrElse(p, 0L) > 0L) {
+      if (bucket.isDefined && e.rows > 0L) {
         val bs = st.getOrElse(bucketStatKey(bucket.get._1, bucket.get._2),
           throw new IllegalStateException(
             s"bucketed commit produced no bucket stat for $p"))
@@ -2054,8 +2118,7 @@ object SnapshotTable {
             s"(${bs.min}..${bs.max}) — partition the batch on the bucket " +
             "column before committing")
       }
-      Entry(p, st, inline, big.keySet,
-        rowsByRel.getOrElse(p, 0L), bytes = len)
+      e.copy(stats = st, blooms = inline, sidecarBloomCols = big.keySet)
     }
   }
 
@@ -2121,8 +2184,7 @@ object SnapshotTable {
           headOps._2.drop(opsAtWrite._2.size)
             .map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
         val rewritten = applySchemaOps(
-          spark.read.option("mergeSchema", "true")
-            .parquet(batchFiles.map(p => s"$dir/$p"): _*), newOps)
+          rawRead(spark, dir, batchFiles.map(Entry(_, Map.empty))), newOps)
         val stale = batchFiles
         batchFiles = writeBatch(rewritten, dir)
         dropOrphanBatch(spark, dir, stale)
@@ -2304,10 +2366,11 @@ object SnapshotTable {
     * the commit records the name and declared type; files written
     * before it read NULL under the column (the format's ordinary
     * pre-widening behavior), files written after carry it physically
-    * (at which point mergeSchema surfaces it and the recorded add is
-    * inert). Time travel to a pre-add version shows the pre-widening
-    * schema. Refused when the name is already in the logical schema —
-    * including a live prior add. Returns the committed version. */
+    * (at which point the merged read schema surfaces it and the
+    * recorded add is inert). Time travel to a pre-add version shows
+    * the pre-widening schema. Refused when the name is already in the
+    * logical schema — including a live prior add. Returns the
+    * committed version. */
   def commitAddColumn(
       spark: SparkSession, dir: String, name: String, dt: DataType): Long = {
     var attempts = 0
@@ -3256,7 +3319,7 @@ object SnapshotTable {
         else {
           // additive schema evolution ON MERGE: delta columns absent
           // from the table widen it (old rows read null through the
-          // per-version mergeSchema union); table columns the delta
+          // per-version merged schema union); table columns the delta
           // does NOT mention are RETAINED on matched rows (keepCols),
           // never nulled — a partial-column upsert is an update, not
           // an erasure. The target is the LOGICAL rows (pending
@@ -3814,6 +3877,7 @@ object SnapshotTable {
       ps
     }
     var paths: Seq[String] = null
+    var keySchema: StructType = null // the key files', read from their footers
     var curCols: Seq[String] = keyCols // the names the key FILES carry
     var opsAtWrite: (Seq[Rename], Seq[Drop]) = null
     var nKeys = -1L
@@ -3837,6 +3901,7 @@ object SnapshotTable {
         val obs = new org.apache.spark.sql.Observation()
         paths = writeKeys(keys.select(keyCols.map(col): _*).distinct()
           .observe(obs, count(lit(1)).as("__graft_nkeys")))
+        keySchema = filesSchema(spark, dir, paths)
         opsAtWrite = headOps
         nKeys = obs.get("__graft_nkeys").asInstanceOf[Long]
       } else if (opsAtWrite != headOps) {
@@ -3867,12 +3932,14 @@ object SnapshotTable {
         }
         if (mapped != curCols) {
           val kf = curCols.zip(mapped)
-            .foldLeft(spark.read.parquet(paths.map(p => s"$dir/$p"): _*)) {
+            .foldLeft(spark.read.schema(keySchema)
+              .parquet(paths.map(p => s"$dir/$p"): _*)) {
               case (df, (o, n)) =>
                 if (o == n) df else df.withColumnRenamed(o, n)
             }
           val stale = paths
           paths = writeKeys(kf)
+          keySchema = filesSchema(spark, dir, paths)
           dropOrphanBatch(spark, dir, stale)
           curCols = mapped
         }
@@ -3884,7 +3951,8 @@ object SnapshotTable {
         Manifest(next,
           streamKey.fold(m.ledger)(m.ledger.addKey), m.statsCols, m.entries,
           bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes :+ DeleteFile(paths, curCols, next, nKeys),
+          deletes = m.deletes :+
+            DeleteFile(paths, curCols, next, nKeys, schema = Some(keySchema)),
           renames = m.renames, drops = m.drops, adds = m.adds),
         carry = m.segments)) // zero data files touched: all carry
         return Some(next)
@@ -3957,7 +4025,7 @@ object SnapshotTable {
       dropOrphanBatch(spark, dir, relPaths)
       return None
     }
-    val df = spark.read.parquet(relPaths.map(p => resolve(dir, p)): _*)
+    val df = rawRead(spark, dir, relPaths.map(Entry(_, Map.empty)))
     commitUpsertMoRInternal(df, dir, keyCols, Some(s"$appId:$batchId"),
       statsCols, bloomCols, expectations, preStaged = Some(relPaths))
   }
@@ -4010,9 +4078,9 @@ object SnapshotTable {
         }
         // the epoch's own committed files ARE the delete's key frame:
         // one image per key (checked right here) means their key
-        // columns hold exactly the doomed keys, and every reader of a
-        // delete's paths already column-prunes to keyCols and
-        // distincts — so a second key-only write would duplicate both
+        // columns hold exactly the doomed keys, each once, and every
+        // reader of a delete's paths already column-prunes to keyCols
+        // — so a second key-only write would duplicate both
         // the I/O and the storage and double the epoch's file count
         // for nothing. Sequence scoping keeps it sound: the delete
         // (seq = next) applies only to entries with seq < next, never
@@ -4021,7 +4089,7 @@ object SnapshotTable {
         // (count_distinct of the key STRUCT matches distinct().count()
         // bit-for-bit — a struct with null fields is itself non-null,
         // so null keys count exactly as row-distinct did).
-        nKeys = spark.read.parquet(batchFiles.map(p => resolve(dir, p)): _*)
+        nKeys = rawRead(spark, dir, newEntries)
           .agg(count_distinct(struct(keyCols.map(col): _*)).as("k"))
           .head().getLong(0)
         if (nRows != nKeys) {
@@ -4047,7 +4115,8 @@ object SnapshotTable {
           bloomFpp = m.bloomFpp,
           deletes =
             if (m.entries.isEmpty) m.deletes // no prior files to doom
-            else m.deletes :+ DeleteFile(batchFiles, keyCols, next, nKeys),
+            else m.deletes :+ DeleteFile(batchFiles, keyCols, next, nKeys,
+              schema = Some(entriesSchema(spark, dir, newEntries))),
           renames = m.renames, drops = m.drops, adds = m.adds),
         carry = m.segments))
         return Some(next)
@@ -4261,7 +4330,7 @@ object SnapshotTable {
     require(ps.nonEmpty, "delete vector wrote no files")
     // per-file counts: bounded by the candidate FILE count (a
     // driver-side census of manifest scale, never of row scale)
-    val perName = spark.read.parquet(ps.map(p => s"$dir/$p"): _*)
+    val perName = spark.read.schema(DvSchema).parquet(ps.map(p => s"$dir/$p"): _*)
       .groupBy(DvNameCol).count().collect()
       .map(r => r.getString(0) -> r.getLong(1))
     require(perName.length <= 100000,
@@ -4538,11 +4607,9 @@ object SnapshotTable {
           // ITS commit — map both frame and key list to today's
           val cur = d.keyCols.map(k => currentName(m, k, d.seq))
           val keyFrame = d.keyCols.zip(cur)
-            .foldLeft(spark.read
-              .parquet(d.paths.map(p => resolve(dir, p)): _*)
-              .select(d.keyCols.map(col): _*)) { case (kf, (o, n)) =>
+            .foldLeft(deleteKeys(spark, dir, d)) { case (kf, (o, n)) =>
               if (o == n) kf else kf.withColumnRenamed(o, n)
-            }.distinct()
+            }
           touchedFiles(spark, dir, m, keyFrame, cur, eligible)
         }
       }.groupBy(_.path).map(_._2.head).toSeq
@@ -4647,12 +4714,10 @@ object SnapshotTable {
       // them raw IS their logical content
       case "append" =>
         val ff = fm.entries.map(_.path).toSet
-        val added = (tm.entries.map(_.path).toSet -- ff).toSeq.sorted
+        val added = tm.entries.filterNot(e => ff.contains(e.path)).sortBy(_.path)
         if (added.isEmpty)
           read(spark, dir, Some(toV)).limit(0).withColumn("_change", lit("insert"))
-        else spark.read.option("mergeSchema", "true")
-          .parquet(added.map(f => resolve(dir, f)): _*)
-          .withColumn("_change", lit("insert"))
+        else rawRead(spark, dir, added).withColumn("_change", lit("insert"))
       // MoR-delete fast path: identical file set, to's delete list
       // extends from's — the changes are EXACTLY the from-state rows
       // matching the new delete keys, computed at DELTA cost: per new
@@ -4676,17 +4741,12 @@ object SnapshotTable {
             val cand = eligible.filter(e => named.contains(e.path))
             if (cand.isEmpty) None
             else {
-              val dvFrame = spark.read
-                .parquet(d.paths.map(p => resolve(dir, p)): _*)
-                .select(col(DvNameCol), col(DvPosCol))
               Some(entriesFrameMeta(spark, dir, mState, cand, keepMeta = true)
-                .join(dvFrame, Seq(DvNameCol, DvPosCol), "left_semi")
+                .join(dvFrame(spark, dir, d), Seq(DvNameCol, DvPosCol), "left_semi")
                 .drop(DvNameCol, DvPosCol))
             }
           } else {
-            val keyFrame = spark.read
-              .parquet(d.paths.map(p => resolve(dir, p)): _*)
-              .select(d.keyCols.map(col): _*).distinct()
+            val keyFrame = deleteKeys(spark, dir, d)
             val cand = prunedCandidates(spark, dir, fm, keyFrame, d.keyCols, eligible)
             if (cand.isEmpty) None
             else Some(entriesFrame(spark, dir, mState, cand)

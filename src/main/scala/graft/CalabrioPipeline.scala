@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
   * Calabrio in production), so the whole dataflow runs and verifies
   * offline.
   *
+  * Stages run as a dependency DAG, not in list order: each starts once
+  * its upstream stages have finished (see fullRun for the edges), and
+  * each fan-out's requests run in its own Spark tasks (the staged
+  * write repartitions instead of coalescing), so the N+1 request
+  * waits of evaluations, transcripts and comments overlap.
+  *
   * Vendor payloads arrive as JSON arrays; the pipeline normalizes to
   * JSON-lines at stage time. Parallelism granularity: staged batches
   * are gzip'd (S9, mirroring the reference's stage upload), and gzip
@@ -68,10 +74,30 @@ object CalabrioPipeline {
       } else None
     }
 
-  /** One full batch run. Returns per-stage results (a failed stage is
-    * isolated, like the reference's full_run). Re-running with the
-    * same inputs is a no-op on every target — the merge algebra's
-    * replay idempotency, property-tested in MaintenanceSpec.
+  /** A once-per-run value shared by concurrently running stages: the
+    * first caller computes it while the others wait, and the run's
+    * `finally` releases it only if some stage asked for it. A failed
+    * computation leaves it unset, so the next caller retries. */
+  private final class RunMemo[A](compute: () => A) {
+    private var value: Option[A] = None
+    def get(): A = synchronized {
+      value.getOrElse { val a = compute(); value = Some(a); a }
+    }
+    def ifComputed(f: A => Unit): Unit = synchronized(value).foreach(f)
+  }
+
+  /** One full batch run, its stages run as a dependency DAG
+    * ([[Pipeline.runDag]]): `purge_stage` precedes both extractions
+    * (and through them everything else); the only chain longer than
+    * extract → land is contacts → evaluations → comments, so forms,
+    * the contacts landings, the backup mirror, transcripts and the
+    * evaluation landings overlap. Returns per-stage results in list
+    * order. A failed stage is isolated like the reference's full_run:
+    * its dependents report `skipped: upstream <name> failed` and never
+    * land stale or missing staging, independent branches still run.
+    * Re-running with the same inputs is a no-op on every target — the
+    * merge algebra's replay idempotency, property-tested in
+    * MaintenanceSpec.
     *
     * All fan-out stages (evaluations, transcripts, comments) key off
     * the CURRENT contacts staging batch, exactly like the reference's
@@ -93,6 +119,17 @@ object CalabrioPipeline {
     import spark.implicits._
     val c = config
 
+    /** The staged batches more than one stage reads (contacts: merge
+      * and the id set below; evaluations: merge, scores and comment
+      * links), each loaded and cached once per run and released after
+      * it. Identical staged-load plans share one cache entry, so
+      * per-stage loads would let the first stage's release drop the
+      * cache a concurrent sibling is still scanning. */
+    val stagedContacts = new RunMemo(() => Ingest.loadStagedLines(
+      spark, s"${c.stageDir}/all_contacts_*.json", Schemas.contacts))
+    val stagedEvals = new RunMemo(() => Ingest.loadStagedLines(
+      spark, s"${c.stageDir}/fix_eval_raw_*.json", Schemas.evaluations))
+
     /** The restated-contact set every fan-out/delete/rebuild keys on —
       * the ids in the CONTACTS staging batch (Update…sql:90,145,181),
       * NOT the contacts that happen to appear in the evals/comments
@@ -103,16 +140,9 @@ object CalabrioPipeline {
       * dedup, so duplicate fan-out keys would duplicate rows), cached
       * small, and released after the run.
       */
-    var stagedIdsMemo: Option[DataFrame] = None
-    def stagedContactIds(): DataFrame = stagedIdsMemo.getOrElse {
-      val st = Ingest.loadStagedLines(
-        spark, s"${c.stageDir}/all_contacts_*.json", Schemas.contacts)
-      val ids = st.good.select(col("id").as("contact_id")).distinct().cache()
-      ids.count() // materialize so the staging read cache can go now
-      st.release()
-      stagedIdsMemo = Some(ids)
-      ids
-    }
+    val stagedIds = new RunMemo(() =>
+      stagedContacts.get().good.select(col("id").as("contact_id")).distinct().cache())
+    def stagedContactIds(): DataFrame = stagedIds.get()
 
     /** Load staged lines, run the stage body, release the batch cache. */
     def withStaged[A](pattern: String, schema: org.apache.spark.sql.types.StructType)(
@@ -132,56 +162,54 @@ object CalabrioPipeline {
         val raw = Ingest.fetchBatch(spark, formsFetcher)
         Sinks.writeJsonBatch(
           Ingest.parseDocs(raw, Schemas.forms), c.stageDir, "forms", 1, shards = c.stageShards)
-      }),
+      }, Seq("purge_stage")),
 
       Pipeline.Stage("replace_forms", () =>
         withStaged("forms_*.json", Schemas.forms) { good =>
           Sinks.overwriteAtomic(Shred.forms(good), formsTable(c))
-        }),
+        }, Seq("extract_forms")),
 
       Pipeline.Stage("extract_contacts", () => {
         val raw = Ingest.fetchWindows(spark, windows, contactsFetcher)
         Sinks.writeJsonBatch(
           Ingest.parseDocs(raw, Schemas.contacts), c.stageDir, "all_contacts", 1, shards = c.stageShards)
-      }),
+      }, Seq("purge_stage")),
 
-      Pipeline.Stage("merge_contacts", () =>
-        withStaged("all_contacts_*.json", Schemas.contacts) { good =>
-          val fresh = Shred.contacts(good)
-          val target = readOr(spark, contactsTable(c), fresh.limit(0))
-          Sinks.overwriteAtomic(
-            Maintenance.insertOnlyMerge(target, fresh, Seq("contact_id")),
-            contactsTable(c))
-        }),
+      Pipeline.Stage("merge_contacts", () => {
+        val fresh = Shred.contacts(stagedContacts.get().good)
+        val target = readOr(spark, contactsTable(c), fresh.limit(0))
+        Sinks.overwriteAtomic(
+          Maintenance.insertOnlyMerge(target, fresh, Seq("contact_id")),
+          contactsTable(c))
+      }, Seq("extract_contacts")),
 
       Pipeline.Stage("extract_evaluations", () => {
         val ids = stagedContactIds().select(col("contact_id")).as[java.lang.Long]
         val raw = Ingest.fetchPerKey(ids, evalsFetcher, tasks = 4)
         Sinks.writeJsonBatch(
           Ingest.parseDocs(raw, Schemas.evaluations), c.stageDir, "fix_eval_raw", 1, shards = c.stageShards)
-      }),
+      }, Seq("extract_contacts")),
 
-      Pipeline.Stage("merge_evaluations", () =>
-        withStaged("fix_eval_raw_*.json", Schemas.evaluations) { good =>
-          val fresh = Shred.evaluations(good)
-          val target = readOr(spark, evaluationsTable(c), fresh.limit(0))
-          val survivors = Maintenance.deleteVanished(
-            target, stagedContactIds(), good.select(col("id").as("evaluation_id")))
-          Sinks.overwriteAtomic(
-            Maintenance.upsertKeepCols(
-              survivors, fresh, Seq("evaluation_id"),
-              keepCols = Set("contact_id", "evaluated_date")),
-            evaluationsTable(c))
-        }),
+      Pipeline.Stage("merge_evaluations", () => {
+        val good = stagedEvals.get().good
+        val fresh = Shred.evaluations(good)
+        val target = readOr(spark, evaluationsTable(c), fresh.limit(0))
+        val survivors = Maintenance.deleteVanished(
+          target, stagedContactIds(), good.select(col("id").as("evaluation_id")))
+        Sinks.overwriteAtomic(
+          Maintenance.upsertKeepCols(
+            survivors, fresh, Seq("evaluation_id"),
+            keepCols = Set("contact_id", "evaluated_date")),
+          evaluationsTable(c))
+      }, Seq("extract_evaluations")),
 
-      Pipeline.Stage("rebuild_scores", () =>
-        withStaged("fix_eval_raw_*.json", Schemas.evaluations) { good =>
-          val fresh = Shred.scores(good)
-          val target = readOr(spark, scoresTable(c), fresh.limit(0))
-          Sinks.overwriteAtomic(
-            Maintenance.rebuildForContacts(target, stagedContactIds(), fresh),
-            scoresTable(c))
-        }),
+      Pipeline.Stage("rebuild_scores", () => {
+        val fresh = Shred.scores(stagedEvals.get().good)
+        val target = readOr(spark, scoresTable(c), fresh.limit(0))
+        Sinks.overwriteAtomic(
+          Maintenance.rebuildForContacts(target, stagedContactIds(), fresh),
+          scoresTable(c))
+      }, Seq("extract_evaluations")),
 
       // S5: per-contact transcript fan-out (qa_api_handler.py:163-200).
       // The reference stages these but has no transform SQL; landing
@@ -191,7 +219,7 @@ object CalabrioPipeline {
         val raw = Ingest.fetchPerKey(ids, transcriptsFetcher, tasks = 4)
         Sinks.writeJsonBatch(
           Ingest.parseDocs(raw, Schemas.transcript), c.stageDir, "fix_transcripts", 1, shards = c.stageShards)
-      }),
+      }, Seq("extract_contacts")),
 
       Pipeline.Stage("rebuild_transcripts", () =>
         withStaged("fix_transcripts_*.json", Schemas.transcript) { good =>
@@ -200,14 +228,13 @@ object CalabrioPipeline {
           Sinks.overwriteAtomic(
             Maintenance.rebuildForContacts(target, stagedContactIds(), fresh),
             transcriptsTable(c))
-        }),
+        }, Seq("extract_transcripts")),
 
-      Pipeline.Stage("extract_comments", () =>
-        withStaged("fix_eval_raw_*.json", Schemas.evaluations) { evals =>
-          val raw = Extraction.followLinks(evals, "comments", commentsFetcher, tasks = 4)
-          Sinks.writeJsonBatch(
-            Ingest.parseDocs(raw, Schemas.comments), c.stageDir, "fix_comments_raw", 1, shards = c.stageShards)
-        }),
+      Pipeline.Stage("extract_comments", () => {
+        val raw = Extraction.followLinks(stagedEvals.get().good, "comments", commentsFetcher, tasks = 4)
+        Sinks.writeJsonBatch(
+          Ingest.parseDocs(raw, Schemas.comments), c.stageDir, "fix_comments_raw", 1, shards = c.stageShards)
+      }, Seq("extract_evaluations")),
 
       Pipeline.Stage("rebuild_comments", () =>
         withStaged("fix_comments_raw_*.json", Schemas.comments) { good =>
@@ -216,7 +243,7 @@ object CalabrioPipeline {
           Sinks.overwriteAtomic(
             Maintenance.rebuildForContacts(target, stagedContactIds(), fresh),
             commentsTable(c))
-        }),
+        }, Seq("extract_comments")),
 
       // D4/J4: the raw-payload backup mirror (Update…sql:217-227) —
       // merge keyed on the id EXTRACTED from the payload, matched rows
@@ -239,9 +266,13 @@ object CalabrioPipeline {
         Sinks.overwriteAtomic(
           Maintenance.upsertKeepCols(target, fresh, Seq("contact_id"), keepCols = Set.empty),
           backupTable(c))
-      }))
+      }, Seq("extract_contacts")))
 
-    try Pipeline.runSequential(stages)
-    finally stagedIdsMemo.foreach(_.unpersist())
+    try Pipeline.runDag(spark, stages)
+    finally {
+      stagedIds.ifComputed(_.unpersist())
+      stagedContacts.ifComputed(_.release())
+      stagedEvals.ifComputed(_.release())
+    }
   }
 }

@@ -109,7 +109,10 @@ object Ingest {
     * per-task request volume is bounded exactly like the reference's
     * break_size loop — but windows run in parallel across executors
     * instead of sequentially on the driver. Returns the raw document
-    * Dataset; parse with parseDocs.
+    * Dataset; parse with parseDocs. The tasks stay parallel only if
+    * the consumer keeps them: a `coalesce` downstream would fold every
+    * window back into one task, which is why Sinks.writeJsonBatch
+    * repartitions instead.
     */
   def fetchWindows(
       spark: SparkSession,
@@ -128,8 +131,13 @@ object Ingest {
   }
 
   /** Per-key fan-out enrich (S4-S6): the N+1 remote join. Keys are
-    * repartitioned so each task carries a bounded batch of requests;
-    * empty responses drop out via flatMap (F6).
+    * repartitioned so each task carries a bounded batch of requests
+    * and `tasks` batches are in flight at once (up to the cores
+    * available); empty responses drop out via flatMap (F6). Like
+    * fetchWindows, the fan-out is only as parallel as its consumer
+    * lets it be: Sinks.writeJsonBatch cuts the lineage with a
+    * repartition, so the requests run in these tasks, not in the
+    * write's.
     */
   def fetchPerKey(
       keys: Dataset[java.lang.Long],

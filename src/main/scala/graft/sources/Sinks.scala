@@ -71,7 +71,17 @@ object Sinks {
 
   /** S7: raw JSON batch sink with the reference's batch-numbered
     * naming scheme (all_contacts_<n>.json, qa_api_handler.py:93-95),
-    * gzip'd like the stage upload (S9, stage_file.sql:1).
+    * gzip'd like the stage upload (S9, stage_file.sql:1), in exactly
+    * `shards` files.
+    *
+    * The write always REPARTITIONS, which cuts the lineage: the
+    * upstream (a fetch fan-out of 1-4 tasks, or one task per window)
+    * runs in its own tasks on the map side, and only the shard writes
+    * sit behind the shuffle. A coalesce is a narrow dependency — under
+    * coalesce(1) the single write task would run every upstream fetch
+    * itself, one after the other — and can never raise the count.
+    * Writing one shard per upstream task instead measured slower and
+    * multiplied the target files the stage loads land in.
     *
     * `shards` is the LOAD parallelism, not just a layout knob: gzip is
     * not a splittable codec, so each shard is exactly one task on the
@@ -82,28 +92,19 @@ object Sinks {
     * caps every window request at limit=50000 — qa_api_handler.py:103).
     * At 100× the batch size, raise shards (CalabrioPipeline wires
     * Config.stageShards through every stage write): the "file" is a
-    * directory either way, the stage loads glob it the same, and each
-    * shard writes from — and later loads into — its own task.
+    * directory either way and the stage loads glob it the same.
     */
   def writeJsonBatch(
       df: DataFrame,
       stageDir: String,
       prefix: String,
       batchId: Int,
-      shards: Int = 1): Unit = {
-    // shards > 1 must REPARTITION: coalesce can only reduce partition
-    // count, and the extraction stages feed 1-4 partition frames
-    // (fetchBatch is repartition(1), fetchPerKey tasks=4) — a coalesce
-    // there silently writes one giant unsplittable gz shard no matter
-    // the knob. coalesce(1) stays for the default: it merges without
-    // a shuffle.
-    val sharded = if (shards == 1) df.coalesce(1) else df.repartition(shards)
-    sharded
+      shards: Int = 1): Unit =
+    df.repartition(shards)
       .write
       .mode("overwrite")
       .option("compression", "gzip")
       .json(s"$stageDir/${prefix}_$batchId.json")
-  }
 
   /** Partitioned overwrite: directory layout keyed by the given
     * columns so per-key queries prune whole partitions at the scan

@@ -1194,15 +1194,15 @@ object SnapshotTable {
     val allEntries = mf.entries
     val all = allEntries.map(_.path)
     var kept: Set[String] = all.toSet
-    // resolve the predicate against the table schema (one footer read
-    // — never the whole listing) to get a catalyst condition via the
-    // PUBLIC api; analysis failure = no pruning, never a wrong answer
+    // resolve the predicate against the version's READ schema — every
+    // entry's recorded schema merged, renames applied, drops hidden,
+    // live ADD COLUMNs surfaced, so no Spark job — to get a catalyst
+    // condition via the PUBLIC api; analysis failure = no pruning,
+    // never a wrong answer. Any one file's physical schema can lack a
+    // renamed or later-added column, and a predicate on it would then
+    // fail analysis and prune nothing.
     val resolved: Seq[Expression] = scala.util.Try {
-      // resolve() like every other read path: a shallow clone's head
-      // names ABSOLUTE external entries, and "$dir/<abs>" would make
-      // this probe throw inside the Try — which silently disabled ALL
-      // planning-time pruning for clones (ADVICE r11)
-      val schema = rawRead(spark, dir, allEntries.take(1)).schema
+      val schema = renamedRawRead(spark, dir, mf, allEntries).schema
       val empty = spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       empty.filter(predicate).queryExecution.analyzed.collectFirst {

@@ -203,5 +203,25 @@ class CalabrioPipelineSpec extends SparkSpec {
     assert(scoresAfter.filter(col("contact_id") === victim).count() === 0)
     // everyone else untouched
     assert(rowsOf(evalsAfter) === survivingExpected)
+
+    // failure boundary: the evaluations fan-out fails, so the stages
+    // that need its staging are skipped and their targets keep their
+    // rows; the independent branches still land
+    val before = allTargets()
+    val failingEvals = new Ingest.KeyFetcher {
+      def fetch(key: Long): Iterator[String] = throw new java.io.IOException("evals API down")
+    }
+    val res4 = run(ef = failingEvals)
+    val status = res4.map(r => r.name -> r.error).toMap
+    assert(status("extract_evaluations").exists(_.contains("evals API down")))
+    assert(status("merge_evaluations") === Some("skipped: upstream extract_evaluations failed"))
+    assert(status("rebuild_scores") === Some("skipped: upstream extract_evaluations failed"))
+    assert(status("extract_comments") === Some("skipped: upstream extract_evaluations failed"))
+    assert(status("rebuild_comments") === Some("skipped: upstream extract_comments failed"))
+    val ok = Set("purge_stage", "extract_forms", "replace_forms", "extract_contacts",
+      "merge_contacts", "extract_transcripts", "rebuild_transcripts", "backup_mirror")
+    assert(ok.forall(status(_).isEmpty), res4.filter(_.error.nonEmpty).mkString("; "))
+    assert(allTargets() === before)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persistedBefore)
   }
 }

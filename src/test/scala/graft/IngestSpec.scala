@@ -2,9 +2,37 @@ package graft
 
 import java.time.LocalDate
 
-import graft.sources.Ingest
+import graft.sources.{Extraction, Ingest, Sinks}
 import graft.sources.Ingest.{DateWindow, KeyFetcher, WindowFetcher}
 import org.apache.spark.sql.functions._
+
+/** Requests in flight across the fetcher tasks of one local-mode JVM.
+  * Each request blocks until `target` requests have been in flight at
+  * once, or for at most two seconds, so a fan-out that really runs its
+  * tasks together passes at once, and a serialized one shows a peak of
+  * one after a bounded wait. */
+object InFlightProbe {
+  private var now = 0
+  private var peak = 0
+  private var target = 0
+
+  def reset(t: Int): Unit = synchronized { now = 0; peak = 0; target = t }
+  def peakSeen: Int = synchronized(peak)
+
+  def serve(): Unit = synchronized {
+    now += 1
+    peak = math.max(peak, now)
+    notifyAll()
+    val deadline = System.nanoTime() + 2000000000L
+    while (peak < target && System.nanoTime() < deadline)
+      wait(math.max(1L, (deadline - System.nanoTime()) / 1000000L))
+    now -= 1
+  }
+
+  /** The one-contact response a probed fetcher returns. */
+  def doc(id: Long): Iterator[String] =
+    Iterator(s"""[{"id": $id, "startTime": 0, "assocCallId": "K$id"}]""")
+}
 
 /** Extraction dataflow: window planning, distributed fan-out via
   * injected fetchers, PERMISSIVE bulk load, concatenated-array
@@ -48,6 +76,58 @@ class IngestSpec extends SparkSpec {
     }
     val out = Ingest.parseDocs(Ingest.fetchPerKey(keys, fetcher, tasks = 2), Schemas.contacts)
     assert(out.select("id").collect().map(_.getLong(0)).toSet === Set(1L, 3L))
+  }
+
+  // the one-shard stage write must not fold a fan-out back into its
+  // own single task: each fan-out reaches min(tasks, keys, cores)
+  // requests in flight through writeJsonBatch's default shards = 1
+  private def stagedDocs(raw: org.apache.spark.sql.Dataset[String], expected: Int): Int = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fanout").toString
+    Sinks.writeJsonBatch(Ingest.parseDocs(raw, Schemas.contacts), dir, "fan", 1)
+    val st = Ingest.loadStagedLines(spark, s"$dir/fan_*.json", Schemas.contacts)
+    try assert(st.good.count() === expected) finally st.release()
+    InFlightProbe.peakSeen
+  }
+
+  private def fanOutWant(tasks: Int, keys: Int): Int =
+    Seq(tasks, keys, spark.sparkContext.defaultParallelism).min
+
+  test("fetchPerKey through the one-shard stage write keeps its requests in flight together") {
+    import spark.implicits._
+    val want = fanOutWant(4, 8)
+    InFlightProbe.reset(want)
+    val keys = spark.createDataset((1L to 8L).map(java.lang.Long.valueOf))
+    val fetcher = new KeyFetcher {
+      def fetch(key: Long): Iterator[String] = { InFlightProbe.serve(); InFlightProbe.doc(key) }
+    }
+    assert(stagedDocs(Ingest.fetchPerKey(keys, fetcher, tasks = 4), 8) >= want)
+  }
+
+  test("followLinks through the one-shard stage write keeps its requests in flight together") {
+    import spark.implicits._
+    val want = fanOutWant(4, 8)
+    InFlightProbe.reset(want)
+    val rows = (1L to 8L).map(i => (i, s"/eval/$i/comment")).toDF("id", "comments")
+    val fetcher = new Extraction.LinkFetcher {
+      def fetch(url: String): Iterator[String] = {
+        InFlightProbe.serve()
+        InFlightProbe.doc("\\d+".r.findFirstIn(url).get.toLong)
+      }
+    }
+    assert(stagedDocs(Extraction.followLinks(rows, "comments", fetcher, tasks = 4), 8) >= want)
+  }
+
+  test("fetchWindows through the one-shard stage write keeps its windows in flight together") {
+    val windows = Ingest.planWindows(LocalDate.parse("2024-01-01"), LocalDate.parse("2024-01-07"), 1)
+    val want = fanOutWant(windows.size, windows.size)
+    InFlightProbe.reset(want)
+    val fetcher = new WindowFetcher {
+      def fetch(w: DateWindow): Iterator[String] = {
+        InFlightProbe.serve()
+        InFlightProbe.doc(w.start.replace("-", "").toLong)
+      }
+    }
+    assert(stagedDocs(Ingest.fetchWindows(spark, windows, fetcher), windows.size) >= want)
   }
 
   test("loadStaged: malformed file quarantined, good glob-matched files load") {

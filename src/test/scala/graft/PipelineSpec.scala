@@ -1,9 +1,14 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import scala.jdk.CollectionConverters._
 
 import graft.sources.{Extraction, Ingest}
 import graft.sources.Ingest.DateWindow
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Orchestration + extraction-config surface (SURVEY §2.10 C1-C3,
   * §2.1 S1/S3).
@@ -22,14 +27,88 @@ class PipelineSpec extends SparkSpec {
     assert(res.forall(_.millis >= 0))
   }
 
-  test("runConcurrent executes all stages and reports in submission order") {
+  test("runDag without edges executes all stages and reports in list order") {
     val n = new AtomicInteger(0)
-    val res = Pipeline.runConcurrent(
-      (1 to 6).map(i => Pipeline.Stage(s"s$i", () => { n.incrementAndGet(); () })),
-      parallelism = 3)
+    val res = Pipeline.runDag(spark,
+      (1 to 6).map(i => Pipeline.Stage(s"s$i", () => { n.incrementAndGet(); () })))
     assert(n.get === 6)
     assert(res.map(_.name) === (1 to 6).map(i => s"s$i"))
     assert(res.forall(_.error.isEmpty))
+  }
+
+  test("runDag overlaps independent stages; a dependent starts only after its upstream ends") {
+    // a and b each wait for the other to have started: both waits
+    // succeed only if the two run at the same time (a serial runner
+    // times out after 10 s instead of hanging)
+    val aIn, bIn = new CountDownLatch(1)
+    val aSawB, bSawA, aDone, cSawADone = new AtomicBoolean(false)
+    val res = Pipeline.runDag(spark, Seq(
+      Pipeline.Stage("a", () => {
+        aIn.countDown()
+        aSawB.set(bIn.await(10, TimeUnit.SECONDS))
+        aDone.set(true)
+      }),
+      Pipeline.Stage("b", () => {
+        bIn.countDown()
+        bSawA.set(aIn.await(10, TimeUnit.SECONDS))
+      }),
+      Pipeline.Stage("c", () => cSawADone.set(aDone.get), upstream = Seq("a"))))
+    assert(res.map(_.name) === Seq("a", "b", "c"))
+    assert(res.forall(_.error.isEmpty), res.mkString("; "))
+    assert(aSawB.get && bSawA.get, "independent stages a and b did not overlap")
+    assert(cSawADone.get, "c started before its upstream a ended")
+  }
+
+  test("runDag failure boundary: dependents of a failed stage are skipped, other branches run") {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def mark(n: String): () => Unit = () => { ran.add(n); () }
+    val res = Pipeline.runDag(spark, Seq(
+      Pipeline.Stage("root", mark("root")),
+      Pipeline.Stage("boom", () => throw new RuntimeException("nope"), Seq("root")),
+      Pipeline.Stage("dep", mark("dep"), Seq("boom")),
+      Pipeline.Stage("depdep", mark("depdep"), Seq("dep", "root")),
+      Pipeline.Stage("indep", mark("indep"), Seq("root"))))
+    assert(res.map(_.name) === Seq("root", "boom", "dep", "depdep", "indep"))
+    assert(ran.asScala.toSet === Set("root", "indep"))
+    val err = res.map(r => r.name -> r.error).toMap
+    assert(err("boom").exists(_.contains("nope")))
+    assert(err("dep") === Some("skipped: upstream boom failed"))
+    assert(err("depdep") === Some("skipped: upstream dep failed"))
+    assert(err("root").isEmpty && err("indep").isEmpty)
+  }
+
+  test("runDag refuses an upstream that is not listed before its stage") {
+    val e = intercept[IllegalArgumentException](Pipeline.runDag(spark, Seq(
+      Pipeline.Stage("a", () => (), Seq("b")),
+      Pipeline.Stage("b", () => ()))))
+    assert(e.getMessage.contains("upstream b"))
+  }
+
+  test("runDag tags each stage's Spark jobs with its name and keeps the caller's job group") {
+    val sc = spark.sparkContext
+    val group = s"pipeline-spec-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach(p =>
+          seen.add(p.getProperty(Pipeline.StageProperty) -> p.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "stage tags")
+    try {
+      val res = Pipeline.runDag(spark, Seq(
+        Pipeline.Stage("one", () => { spark.range(10).count(); () }),
+        Pipeline.Stage("two", () => { spark.range(20).count(); () }, Seq("one"))))
+      assert(res.forall(_.error.isEmpty), res.mkString("; "))
+      GraftTestBus.drain(sc)
+      val tags = seen.asScala.toSeq
+      assert(tags.map(_._1).toSet === Set("one", "two"), tags)
+      // the tag lives on the stage threads only
+      assert(sc.getLocalProperty(Pipeline.StageProperty) === null)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("withProgress observes spark jobs and records") {

@@ -109,8 +109,12 @@ object SnapshotTable {
       schema: Option[StructType] = None)
 
   /** One merge-on-read EQUALITY DELETE: `paths` name delta-sized
-    * parquet files holding the doomed key tuples (columns =
-    * `keyCols`), `seq` is the version that committed it. A delete
+    * parquet files holding the doomed keys, `seq` is the version that
+    * committed it. The files are either key-only (`commitDeleteMoR`
+    * writes them) or full-width data files with ONE image per key,
+    * checked at commit (an upsert epoch names its own data files).
+    * `keyCols` is the projection contract: every reader column-prunes
+    * the files to those columns. A delete
     * applies to data entries with `entry.seq < seq` ONLY — a row
     * re-inserted AFTER the delete (a later merge/append, whose entry
     * carries a higher seq) is never retro-deleted, the real formats'
@@ -655,6 +659,16 @@ object SnapshotTable {
       bloomCols, bloomFpp, deletes, renames, drops, segments, adds)
   }
 
+  /** The manifest of `version`, or of the head — the one head
+    * resolution every read and commit shares. Fails loudly on a table
+    * with no committed version. */
+  private[graft] def manifestAt(
+      spark: SparkSession, dir: String, version: Option[Long] = None): Manifest = {
+    val vs = versions(spark, dir)
+    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
+    readManifest(spark, dir, version.getOrElse(vs.last))
+  }
+
   /** The file list version `v` names (paths relative to `dir`) — the
     * public face of the manifest, for compaction accounting and
     * layout asserts. */
@@ -710,14 +724,14 @@ object SnapshotTable {
   }
 
   /** Publish `m` into its version slot atomically-if-absent. Entries
-    * are written as SEGMENTS: prior segments (`carry`, normally the
-    * head's) whose entries survive unchanged are carried by name; the
-    * delta goes to one fresh immutable segment file staged BEFORE the
-    * manifest rename, so readers never see a manifest naming a missing
-    * segment. Returns false on a lost race (staged segment cleaned). */
+    * are written as SEGMENTS: the segments `m` names (the head's, for
+    * a manifest carried forward from it) whose entries survive
+    * unchanged are carried by name; the delta goes to one fresh
+    * immutable segment file staged BEFORE the manifest rename, so
+    * readers never see a manifest naming a missing segment. Returns
+    * false on a lost race (staged segment cleaned). */
   private[graft] def tryPublish(
-      spark: SparkSession, dir: String, m0: Manifest,
-      carry: Seq[Segment] = Nil): Boolean = {
+      spark: SparkSession, dir: String, m0: Manifest): Boolean = {
     // DV invariant, enforced at the single publish choke point: a
     // delete vector names only LIVE files. When a rewriting commit
     // (compaction) folds some of a DV's files into fresh entries, the
@@ -739,7 +753,7 @@ object SnapshotTable {
     }
     val f = fs(spark, dir)
     f.mkdirs(new Path(s"$dir/$ManifestDir"))
-    val (kept0, residue0) = layoutSegments(m.entries, carry)
+    val (kept0, residue0) = layoutSegments(m.entries, m.segments)
     // coalesce when the layout would exceed the cap — the amortized
     // manifest-merge pass
     val (kept, residue) =
@@ -780,6 +794,147 @@ object SnapshotTable {
   }
 
   // ---------------------------------------------------------------
+  // The commit transaction
+  // ---------------------------------------------------------------
+
+  /** The manifest of a table with no committed version — what a
+    * creating commit (a first append or stream epoch, a clone)
+    * carries forward from. */
+  private val Empty = Manifest(0L, Ledger(), Nil, Nil)
+
+  /** What one attempt of a [[transact]] body decides. */
+  private sealed trait Attempt
+
+  /** Publish nothing: the op has nothing to commit, or its ledger key
+    * is already committed. `orphans` are staged files the op no longer
+    * needs (a recognized replay's batch); transact drops them. */
+  private final case class NoCommit(orphans: Seq[String] = Nil) extends Attempt
+
+  /** Publish `next`: the head copied with only what the op changes —
+    * entries, deletes, ledger, declarations, schema ops. Everything it
+    * does not name is the head's, including the segments carried by
+    * name; transact stamps the version. `staged` are the files this
+    * attempt wrote, dropped when the attempt loses the race. Files an
+    * op stages once for every attempt are not listed: they survive a
+    * lost race. */
+  private final case class Publish(next: Manifest, staged: Seq[String] = Nil) extends Attempt
+
+  private val MaxAttempts = 20
+
+  /** Test-only race injector: invoked once per commit attempt right
+    * before the manifest publish, AFTER the head read and the
+    * attempt's writes — exactly the window a real racing writer
+    * exploits. Specs assign a one-shot closure that commits a
+    * rename/drop/append here, so every op's lost-race path runs
+    * DETERMINISTICALLY instead of by thread timing. Production cost:
+    * one no-op call. */
+  private[graft] var testRaceHook: () => Unit = () => ()
+
+  /** The optimistic commit protocol of every retrying op (the
+    * conflict-retry loop the production formats keep in one place).
+    * Per attempt: read the head — the [[Empty]] manifest when `create`
+    * and the table has none — run `attempt` on it, fire the race hook,
+    * and publish its manifest at head + 1. A lost race drops the
+    * attempt's staged files and retries on the new head;
+    * [[MaxAttempts]] straight losses fail loudly. Returns
+    * Right(committed version), or Left(the head's version) when the
+    * attempt chose not to commit. */
+  private def transact(
+      spark: SparkSession, dir: String, what: String, create: Boolean = false)(
+      attempt: Manifest => Attempt): Either[Long, Long] = {
+    @annotation.tailrec
+    def go(n: Int): Either[Long, Long] = {
+      require(n <= MaxAttempts,
+        s"$what on $dir lost $MaxAttempts straight races; giving up")
+      val head =
+        if (create) versions(spark, dir).lastOption
+          .fold(Empty)(readManifest(spark, dir, _))
+        else manifestAt(spark, dir)
+      attempt(head) match {
+        case NoCommit(orphans) =>
+          dropOrphanBatch(spark, dir, orphans)
+          Left(head.version)
+        case Publish(next, staged) =>
+          testRaceHook()
+          val v = head.version + 1
+          if (tryPublish(spark, dir, next.copy(version = v))) Right(v)
+          else {
+            dropOrphanBatch(spark, dir, staged)
+            go(n + 1)
+          }
+      }
+    }
+    go(1)
+  }
+
+  /** `m` with `statsCols`/`bloomCols` unioned into its sticky
+    * declarations. */
+  private def declare(m: Manifest, statsCols: Seq[String], bloomCols: Seq[String]): Manifest =
+    m.copy(statsCols = (m.statsCols ++ statsCols).distinct,
+      bloomCols = (m.bloomCols ++ bloomCols).distinct)
+
+  /** `m` with `fresh` appended — or, for an overwrite, `fresh` as the
+    * whole census, with pending deletes and schema ops reset (the
+    * caller's names are final there). */
+  private def landed(m: Manifest, fresh: Seq[Entry], overwrite: Boolean): Manifest =
+    if (overwrite) m.copy(entries = fresh, deletes = Nil,
+      renames = Nil, drops = Nil, adds = Nil, segments = Nil)
+    else m.copy(entries = m.entries ++ fresh)
+
+  /** Entries of files an op stages once and publishes on every
+    * attempt, keyed by the declarations (stats/bloom columns, fpp) of
+    * the manifest they publish into: recomputed only when a raced
+    * commit changed those, so a lost race never publishes stats and
+    * blooms computed for an older head's declarations. */
+  private def stagedEntries(
+      spark: SparkSession, dir: String, files: Seq[String],
+      bucket: Option[(String, Int)] = None): Manifest => Seq[Entry] = {
+    var memo: Option[((Seq[String], Seq[String], Double), Seq[Entry])] = None
+    m => {
+      val decl = (m.statsCols, m.bloomCols, m.bloomFpp)
+      memo.collect { case (d, es) if d == decl => es }.getOrElse {
+        val es = batchEntries(spark, dir, files, decl._1, decl._2, decl._3, bucket)
+        memo = Some(decl -> es)
+        es
+      }
+    }
+  }
+
+  /** `m` with its entries replaced by `kept` plus just-written `files`,
+    * whose entries are recorded under `m`'s declarations at the next
+    * seq. */
+  private def withFiles(
+      spark: SparkSession, dir: String, m: Manifest, kept: Seq[Entry],
+      files: Seq[String], bucket: Option[(String, Int)] = None): Manifest =
+    m.copy(entries = kept ++ batchEntries(spark, dir, files, m.statsCols,
+      m.bloomCols, m.bloomFpp, bucket).map(_.copy(seq = m.version + 1)))
+
+  /** The copy-on-write shape merge, delete, the compactions and
+    * applyDeletes share: land `rows` as a fresh batch and publish
+    * `kept` plus its entries. The batch is the attempt's own — a lost
+    * race drops it. */
+  private def rewrite(
+      dir: String, m: Manifest, kept: Seq[Entry], rows: DataFrame,
+      bucket: Option[(String, Int)] = None): Publish = {
+    val files = writeBatch(rows, dir)
+    Publish(withFiles(rows.sparkSession, dir, m, kept, files, bucket), files)
+  }
+
+  /** The schema ops `m` carries beyond `seen` (the state a staged
+    * file's column names reflect), in commit order. Fails loudly when
+    * `m`'s history no longer extends `seen`: a raced RESTORE rewound
+    * it. */
+  private def opsSince(
+      dir: String, what: String, seen: (Seq[Rename], Seq[Drop]),
+      m: Manifest): Seq[Either[Rename, Drop]] = {
+    require(m.renames.startsWith(seen._1) && m.drops.startsWith(seen._2),
+      s"$what on $dir raced a RESTORE that rewound schema history — " +
+        "retry against the restored head")
+    (m.renames.drop(seen._1.size).map(Left(_): Either[Rename, Drop]) ++
+      m.drops.drop(seen._2.size).map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
+  }
+
+  // ---------------------------------------------------------------
   // Reads
   // ---------------------------------------------------------------
 
@@ -787,11 +942,8 @@ object SnapshotTable {
     * plain multi-file parquet read over exactly the manifest's files.
     */
   def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val v = version.getOrElse(vs.last)
-    val m = readManifest(spark, dir, v)
-    require(m.entries.nonEmpty, s"version $v of $dir is empty")
+    val m = manifestAt(spark, dir, version)
+    require(m.entries.nonEmpty, s"version ${m.version} of $dir is empty")
     entriesFrame(spark, dir, m, m.entries)
   }
 
@@ -1038,9 +1190,7 @@ object SnapshotTable {
   private def pruneEntries(
       spark: SparkSession, dir: String,
       filters: Seq[StatFilter], version: Option[Long]): (Manifest, Seq[Entry]) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     val norm = filters.map(f =>
       (f.colName, f.lower.map(toStatVal), f.upper.map(toStatVal)))
     val kept = m.entries.filter { e =>
@@ -1098,9 +1248,7 @@ object SnapshotTable {
       spark: SparkSession, dir: String, colName: String, values: Seq[Any],
       version: Option[Long]): (Manifest, Seq[Entry]) = {
     require(values.nonEmpty, "pruneFilesByKeys needs at least one key value")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     val canon = values.map(bloomKeyString)
     val hashes = hashKeyStrings(spark, canon)
     val statVals = values.map(v => scala.util.Try(toStatVal(v)).toOption)
@@ -1187,10 +1335,8 @@ object SnapshotTable {
         case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
         case other => other
       }
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val v = version.getOrElse(vs.last)
-    val mf = readManifest(spark, dir, v)
+    val mf = manifestAt(spark, dir, version)
+    val v = mf.version
     val allEntries = mf.entries
     val all = allEntries.map(_.path)
     var kept: Set[String] = all.toSet
@@ -1332,9 +1478,7 @@ object SnapshotTable {
         "merge-on-read delete(s) are pending — run applyDeletes (or read the data)")
 
   def countRows(spark: SparkSession, dir: String, version: Option[Long] = None): Long = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     // positional delete vectors carry EXACT cardinality (their rows
     // field counts marked positions, disjoint across pending DVs by
     // commit-time construction and trimmed with the entry list at
@@ -1447,9 +1591,7 @@ object SnapshotTable {
       spark: SparkSession, dir: String, groupCol: String,
       version: Option[Long] = None): (DataFrame, Int, Int, Int) = {
     import spark.implicits._
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     // the countRowsWhere demotion discipline: equality deletes refuse,
     // delete VECTORS demote exactly the files they name to the scan
     // (which applies them) — the untouched bulk keeps the fast path
@@ -1503,9 +1645,7 @@ object SnapshotTable {
       spark: SparkSession, dir: String, groupCol: String, sumCol: String,
       version: Option[Long] = None): (DataFrame, Int, Int, Int) = {
     import spark.implicits._
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     // same demotion as groupCounts: vectors demote their named files
     val (dvsS, eqsS) = m.deletes.partition(isDv)
     requireNoPendingDeletes(m.copy(deletes = eqsS), dir,
@@ -1551,9 +1691,7 @@ object SnapshotTable {
   private def classifyByRange(
       spark: SparkSession, dir: String, filter: StatFilter,
       version: Option[Long]): (Manifest, Seq[Entry], Seq[Entry], Int) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     // pending EQUALITY deletes make every file's stats unusable (a key
     // file says nothing about which data rows it dooms) — refuse as
     // ever. Pending delete VECTORS name exactly the files they touch:
@@ -1626,9 +1764,7 @@ object SnapshotTable {
   def statExtremes(
       spark: SparkSession, dir: String, colName: String,
       version: Option[Long] = None): (Any, Any) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     requireNoPendingDeletes(m, dir, s"statExtremes($colName)")
     require(m.entries.nonEmpty, s"version has no files — no extremes to report")
     val missing = m.entries.filter(e => entryStat(m, e, colName).isEmpty)
@@ -2122,103 +2258,57 @@ object SnapshotTable {
     }
   }
 
-  /** Test-only race injector: invoked once per commit attempt right
-    * before the manifest publish, AFTER the head read and batch write —
-    * exactly the window a real racing writer exploits. Specs assign a
-    * one-shot closure that commits a rename/drop/stream-batch here, so
-    * the lost-race revalidation paths are exercised DETERMINISTICALLY
-    * instead of by thread timing. Production cost: one no-op call. */
-  private[graft] var testRaceHook: () => Unit = () => ()
-
   /** Returns None when the batch's ledger key (batchId / streamKey)
     * turns out to be already committed — checked against EVERY head
-    * read in the retry loop, not just once up front, so two writers
-    * racing the same key can never both append (ADVICE r11). */
+    * read, not just once up front, so two writers racing the same key
+    * can never both append (ADVICE r11). */
   private def commitBatch(
       df: DataFrame, dir: String, append: Boolean,
       batchId: Option[Long] = None, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil, streamKey: Option[String] = None,
       bucket: Option[(String, Int)] = None): Option[Long] = {
     val spark = df.sparkSession
-    var batchFiles: Seq[String] = null
+    var batch: Seq[String] = Nil
+    var entriesOf: Manifest => Seq[Entry] = null
     var opsAtWrite: (Seq[Rename], Seq[Drop]) = null
-    var newEntries: Seq[Entry] = null
-    var entriesFor: (Seq[String], Seq[String]) = null
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"commit to $dir lost 20 straight races; giving up")
-      val head = versions(spark, dir).lastOption.map(readManifest(spark, dir, _))
-      val headLed = head.map(_.ledger).getOrElse(Ledger())
-      if (batchId.exists(headLed.contains("", _)) ||
-        streamKey.exists(headLed.containsKey)) {
+    def stage(rows: DataFrame): Unit = {
+      batch = writeBatch(rows, dir)
+      entriesOf = stagedEntries(spark, dir, batch, bucket)
+    }
+    transact(spark, dir, "commit", create = true) { m =>
+      val headOps = (m.renames, m.drops)
+      if (batchId.exists(m.ledger.contains("", _)) || streamKey.exists(m.ledger.containsKey)) {
         // a racing writer committed our key between head reads: the
         // batch is a recognized replay, never a duplicate append
-        if (batchFiles != null) dropOrphanBatch(spark, dir, batchFiles)
-        return None
+        NoCommit(orphans = batch)
+      } else {
+        if (opsAtWrite == null) {
+          // the batch is written AFTER the first head read, so the
+          // schema-op state it was written under is EXACTLY opsAtWrite —
+          // any op observed later arrived via a lost race and triggers
+          // the rewrite below
+          stage(df)
+          opsAtWrite = headOps
+        } else if (append && opsAtWrite != headOps) {
+          // a racing writer committed a rename/drop AFTER our batch
+          // files were written: published as-is they would carry seq >
+          // the op's seq under the OLD names, so reads would surface
+          // the stale name as a null-padded extra column and MoR key
+          // mapping would silently skip these files (ADVICE r11).
+          // Rewrite the batch under the current names. (Overwrites
+          // reset the rename/drop lists — the caller's names are final
+          // there; no rewrite.)
+          val stale = batch
+          stage(applySchemaOps(rawRead(spark, dir, stale.map(Entry(_, Map.empty))),
+            opsSince(dir, "commit", opsAtWrite, m)))
+          dropOrphanBatch(spark, dir, stale)
+          opsAtWrite = headOps
+        }
+        val led = batchId.fold(m.ledger)(m.ledger.add("", _))
+        val d = declare(m, statsCols, bloomCols).copy(ledger = streamKey.fold(led)(led.addKey))
+        Publish(landed(d, entriesOf(d).map(_.copy(seq = m.version + 1)), !append))
       }
-      val headOps = (head.map(_.renames).getOrElse(Nil),
-        head.map(_.drops).getOrElse(Nil))
-      if (batchFiles == null) {
-        // the batch is written AFTER the first head read, so the
-        // schema-op state it was written under is EXACTLY opsAtWrite —
-        // any op observed later arrived via a lost race and triggers
-        // the rewrite below
-        batchFiles = writeBatch(df, dir)
-        opsAtWrite = headOps
-      } else if (append && opsAtWrite != headOps) {
-        // a racing writer committed a rename/drop AFTER our batch
-        // files were written: published as-is they would carry seq >
-        // the op's seq under the OLD names, so reads would surface
-        // the stale name as a null-padded extra column and MoR key
-        // mapping would silently skip these files (ADVICE r11).
-        // Rewrite the batch under the current names, then retry.
-        // (Overwrites publish with empty rename/drop lists — the
-        // caller's names are final there; no rewrite.)
-        require(headOps._1.take(opsAtWrite._1.size) == opsAtWrite._1 &&
-          headOps._2.take(opsAtWrite._2.size) == opsAtWrite._2,
-          s"commit to $dir raced a RESTORE that rewound schema history — " +
-            "retry the commit against the restored head")
-        val newOps = (headOps._1.drop(opsAtWrite._1.size)
-          .map(Left(_): Either[Rename, Drop]) ++
-          headOps._2.drop(opsAtWrite._2.size)
-            .map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
-        val rewritten = applySchemaOps(
-          rawRead(spark, dir, batchFiles.map(Entry(_, Map.empty))), newOps)
-        val stale = batchFiles
-        batchFiles = writeBatch(rewritten, dir)
-        dropOrphanBatch(spark, dir, stale)
-        opsAtWrite = headOps
-        newEntries = null // stats/blooms must be recomputed under the new names
-      }
-      val tableStats = (head.map(_.statsCols).getOrElse(Nil) ++ statsCols).distinct
-      val tableBlooms = (head.map(_.bloomCols).getOrElse(Nil) ++ bloomCols).distinct
-      val fpp = head.map(_.bloomFpp).getOrElse(0.01)
-      if (newEntries == null || entriesFor != ((tableStats, tableBlooms))) {
-        newEntries = batchEntries(spark, dir, batchFiles, tableStats,
-          tableBlooms, fpp, bucket)
-        entriesFor = (tableStats, tableBlooms)
-      }
-      val carried = if (append) head.map(_.entries).getOrElse(Nil) else Nil
-      // an overwrite replaces the logical contents, so pending
-      // merge-on-read deletes die with the old entries; an append
-      // carries them (they still apply to the carried files)
-      val dels = if (append) head.map(_.deletes).getOrElse(Nil) else Nil
-      val next = head.map(_.version).getOrElse(0L) + 1
-      val led1 = batchId.fold(headLed)(headLed.add("", _))
-      val led = streamKey.fold(led1)(led1.addKey)
-      testRaceHook()
-      if (tryPublish(spark, dir, Manifest(next, led, tableStats,
-        carried ++ newEntries.map(_.copy(seq = next)),
-        bloomCols = tableBlooms, bloomFpp = fpp,
-        deletes = dels,
-        renames = if (append) head.map(_.renames).getOrElse(Nil) else Nil,
-        drops = if (append) head.map(_.drops).getOrElse(Nil) else Nil,
-        adds = if (append) head.map(_.adds).getOrElse(Nil) else Nil),
-        carry = if (append) head.map(_.segments).getOrElse(Nil) else Nil))
-        return Some(next)
-    }
-    None // unreachable
+    }.toOption
   }
 
   /** OPTIMIZE: rewrite the head's file set into ceil(bytes / target)
@@ -2233,9 +2323,7 @@ object SnapshotTable {
   def compactHead(spark: SparkSession, dir: String, targetBytes: Long): Long = {
     require(targetBytes > 0)
     val f = fs(spark, dir)
-    val head = versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-    val fls = files(spark, dir, head)
+    val fls = manifestAt(spark, dir).entries.map(_.path)
     val bytes = fls.map(p => f.getFileStatus(new Path(resolve(dir, p))).getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     commitOverwrite(read(spark, dir).coalesce(n), dir)
@@ -2252,28 +2340,12 @@ object SnapshotTable {
     */
   def restore(spark: SparkSession, dir: String, v: Long): Long = {
     val target = readManifest(spark, dir, v) // throws if absent
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"restore on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).last
-      val head = readManifest(spark, dir, headV)
-      if (tryPublish(spark, dir,
-        // stats/bloom declarations revert WITH the target: they name
-        // columns under the target's rename/drop state, and keeping
-        // the head's would leave future commits recording stats under
-        // names the restored schema may not carry. The LEDGER stays
-        // the head's — batch ids are monotone facts, not schema.
-        Manifest(headV + 1, head.ledger, target.statsCols, target.entries,
-          bloomCols = target.bloomCols, bloomFpp = target.bloomFpp,
-          deletes = target.deletes,
-          renames = target.renames, drops = target.drops, adds = target.adds),
-        // the restore is a metadata-only commit: the target's own
-        // segments carry by name, zero entry bytes rewritten
-        carry = target.segments))
-        return headV + 1
-    }
-    -1L // unreachable
+    // everything reverts WITH the target — stats/bloom declarations
+    // name columns under the target's rename/drop state, and its own
+    // segments carry by name (a metadata-only commit, zero entry bytes
+    // rewritten) — except the LEDGER, which stays the head's: batch
+    // ids are monotone facts, not schema
+    transact(spark, dir, "restore")(m => Publish(target.copy(ledger = m.ledger))).merge
   }
 
   /** RENAME a column — METADATA-ONLY schema evolution beyond the
@@ -2295,30 +2367,16 @@ object SnapshotTable {
   def commitRenameColumn(
       spark: SparkSession, dir: String, from: String, to: String): Long = {
     require(from != to, "commitRenameColumn needs distinct names")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"rename on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "rename") { m =>
       val cols = entriesFrame(spark, dir, m, m.entries).columns.toSet
       require(cols.contains(from),
         s"commitRenameColumn: no column '$from' in the logical schema of $dir")
       require(!cols.contains(to),
         s"commitRenameColumn: '$to' already exists in $dir — renames never shadow")
-      val next = headV + 1
       def follow(c: String) = if (c == from) to else c
-      if (tryPublish(spark, dir,
-        Manifest(next, m.ledger, m.statsCols.map(follow), m.entries,
-          bloomCols = m.bloomCols.map(follow), bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames :+ Rename(from, to, next),
-          drops = m.drops, adds = m.adds),
-        carry = m.segments)) // metadata-only: every segment carries
-        return next
-    }
-    -1L // unreachable
+      Publish(m.copy(statsCols = m.statsCols.map(follow), bloomCols = m.bloomCols.map(follow),
+        renames = m.renames :+ Rename(from, to, m.version + 1)))
+    }.merge
   }
 
   /** DROP a column — the erasure half of schema evolution, also
@@ -2333,14 +2391,8 @@ object SnapshotTable {
     * the column (the delete would silently stop applying — apply the
     * deletes first) and when the column is absent. Returns the
     * committed version. */
-  def commitDropColumn(spark: SparkSession, dir: String, name: String): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"drop on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+  def commitDropColumn(spark: SparkSession, dir: String, name: String): Long =
+    transact(spark, dir, "drop") { m =>
       require(entriesFrame(spark, dir, m, m.entries).columns.contains(name),
         s"commitDropColumn: no column '$name' in the logical schema of $dir")
       m.deletes.foreach { d =>
@@ -2348,18 +2400,10 @@ object SnapshotTable {
           s"commitDropColumn: a pending merge-on-read delete keys on '$name' — " +
             "run applyDeletes first, or the retraction would silently stop applying")
       }
-      val next = headV + 1
-      if (tryPublish(spark, dir,
-        Manifest(next, m.ledger, m.statsCols.filterNot(_ == name), m.entries,
-          bloomCols = m.bloomCols.filterNot(_ == name), bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops :+ Drop(name, next),
-          adds = m.adds),
-        carry = m.segments)) // metadata-only: every segment carries
-        return next
-    }
-    -1L // unreachable
-  }
+      Publish(m.copy(statsCols = m.statsCols.filterNot(_ == name),
+        bloomCols = m.bloomCols.filterNot(_ == name),
+        drops = m.drops :+ Drop(name, m.version + 1)))
+    }.merge
 
   /** ADD a column (`ALTER TABLE … ADD COLUMN`) — the widening half of
     * schema evolution, METADATA-ONLY and seq-scoped like rename/drop:
@@ -2372,31 +2416,16 @@ object SnapshotTable {
     * logical schema — including a live prior add. Returns the
     * committed version. */
   def commitAddColumn(
-      spark: SparkSession, dir: String, name: String, dt: DataType): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"add-column on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+      spark: SparkSession, dir: String, name: String, dt: DataType): Long =
+    transact(spark, dir, "add-column") { m =>
       val cols: Set[String] =
         (if (m.entries.nonEmpty)
           entriesFrame(spark, dir, m, m.entries).columns.toSet
         else Set.empty) ++ liveAdds(m).map(_._1)
       require(!cols.contains(name),
         s"commitAddColumn: '$name' already exists in $dir")
-      val next = headV + 1
-      if (tryPublish(spark, dir,
-        Manifest(next, m.ledger, m.statsCols, m.entries,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes, renames = m.renames, drops = m.drops,
-          adds = m.adds :+ AddCol(name, dt.json, next)),
-        carry = m.segments)) // metadata-only: every segment carries
-        return next
-    }
-    -1L // unreachable
-  }
+      Publish(m.copy(adds = m.adds :+ AddCol(name, dt.json, m.version + 1)))
+    }.merge
 
   /** DESCRIBE HISTORY — one row per committed version, answered from
     * the MANIFESTS alone (zero data I/O): file-census deltas
@@ -2434,14 +2463,12 @@ object SnapshotTable {
     * would read as the whole table. */
   def detail(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, vs.last)
+    val m = manifestAt(spark, dir)
     def total(f: Entry => Long): Option[Long] = {
       val xs = m.entries.map(f)
       if (xs.exists(_ < 0L)) None else Some(xs.sum)
     }
-    Seq((vs.last, m.committedAtMs, m.entries.size,
+    Seq((m.version, m.committedAtMs, m.entries.size,
       total(_.rows), total(_.bytes), m.deletes.size,
       m.statsCols.mkString(","), m.bloomCols.mkString(",")))
       .toDF("version", "committed_at_ms", "n_files", "total_rows",
@@ -2470,9 +2497,7 @@ object SnapshotTable {
     require(spec.nonEmpty,
       s"snapshot table $dir declares no PARTITIONED BY spec — " +
         "there are no partitions to list")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, vs.last)
+    val m = manifestAt(spark, dir)
     val zone = java.time.ZoneId.of(
       spark.sessionState.conf.sessionLocalTimeZone)
     def truncRender(fn: String, micros: java.math.BigDecimal): String = {
@@ -2789,9 +2814,7 @@ object SnapshotTable {
   def clusteringDepth(
       spark: SparkSession, dir: String, colName: String,
       version: Option[Long] = None): (Int, Int, Int) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val m = readManifest(spark, dir, version.getOrElse(vs.last))
+    val m = manifestAt(spark, dir, version)
     val (tracked, untracked) =
       m.entries.partition(e => entryStat(m, e, colName).nonEmpty)
     val events = tracked.flatMap { e =>
@@ -2830,38 +2853,21 @@ object SnapshotTable {
       smallBytes: Long, targetBytes: Long): Long = {
     require(smallBytes > 0 && targetBytes > 0)
     val f = fs(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"compactSmallFiles on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
-      val sized = sizedEntries(spark, dir, m, f)
-      val (small, large) = sized.partition(_._2 < smallBytes)
-      if (small.size <= 1) return headV
-      val bytes = small.map(_._2).sum
-      val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    transact(spark, dir, "compactSmallFiles") { m =>
+      val (small, large) = sizedEntries(spark, dir, m.entries, f).partition(_._2 < smallBytes)
       // the compacted output is the small files' LOGICAL rows: pending
       // merge-on-read deletes are folded in here (the rewrite carries
       // a fresh seq, past which they no longer apply), while the
       // manifest keeps the delete list for the carried large files
-      val compacted = entriesFrame(spark, dir, m, small.map(_._1)).coalesce(n)
-      val batchFiles = writeBatch(compacted, dir)
-      val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-        m.bloomCols, m.bloomFpp)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          large.map(_._1) ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // all-large segments carry by name
-        return headV + 1
-      dropOrphanBatch(spark, dir, batchFiles)
-    }
-    -1L // unreachable
+      if (small.size <= 1) NoCommit()
+      else rewrite(dir, m, large.map(_._1), entriesFrame(spark, dir, m, small.map(_._1))
+        .coalesce(filesFor(small, targetBytes)))
+    }.merge
   }
+
+  /** ceil(bytes / target) output files for compacting `sized`. */
+  private def filesFor(sized: Seq[(Entry, Long)], targetBytes: Long): Int =
+    math.max(1, math.ceil(sized.map(_._2).sum.toDouble / targetBytes).toInt)
 
   /** A Column predicate as a manifest-classifiable [[DmlPred]]:
     * resolved against the table's own frame (implicit casts land on
@@ -2949,41 +2955,16 @@ object SnapshotTable {
           "literals (casts, functions, and subqueries cannot prove " +
           "file coverage from stats)"))
     val f = fs(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"compactWhere on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
-      val scoped = m.entries.filter(e =>
-        classifyEntry(m, e, p).contains(true))
-      val sized = scoped.map(e =>
-        e -> (if (e.bytes >= 0L) e.bytes
-              else f.getFileStatus(new Path(resolve(dir, e.path))).getLen))
-      val small = sized.filter(_._2 < smallBytes)
-      if (small.size <= 1) return (headV, 0)
-      val bytes = small.map(_._2).sum
-      val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val compacted = entriesFrame(spark, dir, m, small.map(_._1)).coalesce(n)
-      val batchFiles = writeBatch(compacted, dir)
-      val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-        m.bloomCols, m.bloomFpp)
-      val untouched = m.entries.filterNot(e =>
-        small.exists(_._1.path == e.path))
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return (headV + 1, small.size)
-      dropOrphanBatch(spark, dir, batchFiles)
-    }
-    (-1L, 0) // unreachable
+    var compacted = 0
+    transact(spark, dir, "compactWhere") { m =>
+      val small = sizedEntries(spark, dir,
+        m.entries.filter(e => classifyEntry(m, e, p).contains(true)), f)
+        .filter(_._2 < smallBytes)
+      compacted = small.size
+      if (small.size <= 1) NoCommit()
+      else rewrite(dir, m, m.entries.filterNot(e => small.exists(_._1.path == e.path)),
+        entriesFrame(spark, dir, m, small.map(_._1)).coalesce(filesFor(small, targetBytes)))
+    }.fold(head => (head, 0), v => (v, compacted))
   }
 
   /** BUCKET-AWARE small-file compaction: merge small files WITHIN
@@ -3009,9 +2990,9 @@ object SnapshotTable {
     * the listing-shaped planning the format exists to avoid; only
     * legacy entries predating byte recording are stat'd. */
   private def sizedEntries(
-      spark: SparkSession, dir: String, m: Manifest,
+      spark: SparkSession, dir: String, entries: Seq[Entry],
       f: FileSystem): Seq[(Entry, Long)] =
-    m.entries.map(e =>
+    entries.map(e =>
       e -> (if (e.bytes >= 0L) e.bytes
             else f.getFileStatus(new Path(resolve(dir, e.path))).getLen))
 
@@ -3028,19 +3009,8 @@ object SnapshotTable {
     // of a grouped bucket would otherwise rewrite to a 0-row file the
     // single-bucket require refuses — maintenance must not dead-end on
     // its own input
-    versions(spark, dir).lastOption.foreach { v =>
-      if (readManifest(spark, dir, v).deletes.nonEmpty)
-        applyDeletes(spark, dir): Unit
-    }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"compactBucketsSmallFiles on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    applyDeletes(spark, dir)
+    transact(spark, dir, "compactBucketsSmallFiles") { m =>
       def bucketOf(e: Entry): Option[Long] = e.stats.get(key).flatMap { s =>
         (s.min, s.max) match {
           case (mn: java.math.BigDecimal, mx: java.math.BigDecimal)
@@ -3049,41 +3019,30 @@ object SnapshotTable {
           case _ => None
         }
       }
-      val sized = sizedEntries(spark, dir, m, f)
-      val groups = sized
+      val groups = sizedEntries(spark, dir, m.entries, f)
         .filter { case (e, len) => e.rows != 0L && len < smallBytes }
-        .flatMap { case (e, len) => bucketOf(e).map(v => (v, e, len)) }
-        .groupBy(_._1).filter(_._2.size >= 2)
-      if (groups.isEmpty) return headV
-      val rewritten = groups.values.flatten.map(_._2.path).toSet
-      val results = groups.toSeq.sortBy(_._1).map { case (_, es) =>
-        val bytes = es.map(_._3).sum
-        val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-        val batchFiles = writeBatch(
-          entriesFrame(spark, dir, m, es.map(_._2)).coalesce(nOut), dir)
-        batchFiles -> batchEntries(spark, dir, batchFiles, m.statsCols,
-          m.bloomCols, m.bloomFpp, bucket = Some(bucket))
+        .flatMap { case (e, len) => bucketOf(e).map(v => (v, (e, len))) }
+        .groupMap(_._1)(_._2).filter(_._2.size >= 2)
+      if (groups.isEmpty) NoCommit()
+      else {
+        val rewritten = groups.values.flatten.map(_._1.path).toSet
+        val results = groups.toSeq.sortBy(_._1).map { case (_, es) =>
+          val batchFiles = writeBatch(entriesFrame(spark, dir, m, es.map(_._1))
+            .coalesce(filesFor(es, targetBytes)), dir)
+          batchFiles -> batchEntries(spark, dir, batchFiles, m.statsCols,
+            m.bloomCols, m.bloomFpp, bucket = Some(bucket))
+        }
+        // a group folded empty (every row doomed between the fold above
+        // and this pass) simply DROPS from the census — a 0-row file
+        // carries no stats and names no bucket
+        val newEntries = results.flatMap(_._2).filter(_.rows != 0L)
+        require(newEntries.forall(e => bucketOf(e).isDefined),
+          s"bucket compaction on $dir produced a file without a " +
+            "single-valued __bucket stat — refusing to publish")
+        Publish(m.copy(entries = m.entries.filterNot(e => rewritten.contains(e.path)) ++
+          newEntries.map(_.copy(seq = m.version + 1))), staged = results.flatMap(_._1))
       }
-      val allBatchFiles = results.flatMap(_._1)
-      // a group folded empty (every row doomed between the fold above
-      // and this pass) simply DROPS from the census — a 0-row file
-      // carries no stats and names no bucket
-      val newEntries = results.flatMap(_._2).filter(_.rows != 0L)
-      require(newEntries.forall(e => bucketOf(e).isDefined),
-        s"bucket compaction on $dir produced a file without a " +
-          "single-valued __bucket stat — refusing to publish")
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          m.entries.filterNot(e => rewritten.contains(e.path)) ++
-            newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-      dropOrphanBatch(spark, dir, allBatchFiles)
-    }
-    -1L // unreachable
+    }.merge
   }
 
   /** OPTIMIZE ZORDER: compactHead with a Morton-interleaved layout
@@ -3105,9 +3064,7 @@ object SnapshotTable {
       targetBytes: Long, bits: Int = 16): Long = {
     require(targetBytes > 0)
     val f = fs(spark, dir)
-    val head = versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-    val fls = files(spark, dir, head)
+    val fls = manifestAt(spark, dir).entries.map(_.path)
     val bytes = fls.map(p => f.getFileStatus(new Path(resolve(dir, p))).getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val df = read(spark, dir)
@@ -3233,25 +3190,19 @@ object SnapshotTable {
   def readPaths(
       spark: SparkSession, dir: String, paths: Seq[String],
       version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val v = version.getOrElse(vs.last)
-    val m = readManifest(spark, dir, v)
+    val m = manifestAt(spark, dir, version)
     val want = paths.toSet
     val kept = m.entries.filter(e => want.contains(e.path))
-    if (kept.isEmpty) read(spark, dir, Some(v)).limit(0)
+    if (kept.isEmpty) read(spark, dir, Some(m.version)).limit(0)
     else entriesFrame(spark, dir, m, kept)
   }
 
   def readMatching(
       spark: SparkSession, dir: String, keyed: DataFrame, keys: Seq[String],
       version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    val v = version.getOrElse(vs.last)
-    val m = readManifest(spark, dir, v)
+    val m = manifestAt(spark, dir, version)
     val kept = prunedCandidates(spark, dir, m, keyed, keys)
-    if (kept.isEmpty) read(spark, dir, Some(v)).limit(0)
+    if (kept.isEmpty) read(spark, dir, Some(m.version)).limit(0)
     else entriesFrame(spark, dir, m, kept)
   }
 
@@ -3305,13 +3256,7 @@ object SnapshotTable {
     val spark = delta.sparkSession
     checkExpectations(delta, expectations, dir)
     val keyed = delta.select(keys.map(col): _*).distinct()
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"merge into $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "merge") { m =>
       val touched = touchedFiles(spark, dir, m, keyed, keys)
       val untouched = m.entries.filterNot(e => touched.exists(_.path == e.path))
       val rewritten =
@@ -3335,22 +3280,8 @@ object SnapshotTable {
             fill(target, delta), fill(delta, target), keys,
             keepCols = target.columns.filterNot(delta.columns.contains).toSet)
         }
-      val batchFiles = writeBatch(rewritten, dir)
-      val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-        m.bloomCols, m.bloomFpp)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // untouched-file segments carry by name
-        return headV + 1
-      // lost the race: our batch is orphaned (no manifest names it);
-      // drop it and recompute against the new head
-      dropOrphanBatch(spark, dir, batchFiles)
-    }
-    -1L // unreachable
+      rewrite(dir, m, untouched, rewritten)
+    }.merge
   }
 
   /** DELETE by key: drop the head rows whose key appears in `keys`
@@ -3365,43 +3296,14 @@ object SnapshotTable {
   def commitDelete(keys: DataFrame, dir: String, keyCols: Seq[String]): Long = {
     val spark = keys.sparkSession
     val keyed = keys.select(keyCols.map(col): _*).distinct()
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"delete from $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "delete") { m =>
       val touched = touchedFiles(spark, dir, m, keyed, keyCols)
-      if (touched.isEmpty) {
-        // nothing holds a doomed key: the delete is a metadata-only
-        // no-op commit (every entry carried forward)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols, m.entries,
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            deletes = m.deletes,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
-      } else {
-        val untouched = m.entries.filterNot(e => touched.exists(_.path == e.path))
-        val survivors = entriesFrame(spark, dir, m, touched)
-          .join(keyed, keyCols, "left_anti")
-        val batchFiles = writeBatch(survivors, dir)
-        val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-          m.bloomCols, m.bloomFpp)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols,
-            untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            deletes = m.deletes,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
-        dropOrphanBatch(spark, dir, batchFiles)
-      }
-    }
-    -1L // unreachable
+      // nothing holds a doomed key: the delete is a metadata-only
+      // no-op commit (every entry carried forward)
+      if (touched.isEmpty) Publish(m)
+      else rewrite(dir, m, m.entries.filterNot(e => touched.exists(_.path == e.path)),
+        entriesFrame(spark, dir, m, touched).join(keyed, keyCols, "left_anti"))
+    }.merge
   }
 
   // -----------------------------------------------------------------
@@ -3546,28 +3448,14 @@ object SnapshotTable {
     * command then re-runs). Pending MoR deletes coexist safely: a
     * dropped file's rows were all doomed by the predicate anyway. */
   private[graft] def deleteFilesWhere(
-      spark: SparkSession, dir: String, p: DmlPred): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"metadata delete on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+      spark: SparkSession, dir: String, p: DmlPred): Long =
+    transact(spark, dir, "metadata delete") { m =>
       val classified = m.entries.map(e => e -> classifyEntry(m, e, p))
       require(classified.forall(_._2.isDefined),
         s"DELETE on $dir is no longer metadata-answerable (a concurrent commit " +
           "changed the file census mid-delete); re-run the DELETE")
-      val keep = classified.collect { case (e, Some(false)) => e }
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols, keep,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes, renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-    }
-    -1L // unreachable
-  }
+      Publish(m.copy(entries = classified.collect { case (e, Some(false)) => e }))
+    }.merge
 
   /** REPLACE WHERE — the filter-scoped atomic overwrite (the
     * lakehouse formats' replaceWhere; SQL's `INSERT INTO … REPLACE
@@ -3595,19 +3483,8 @@ object SnapshotTable {
       shape: DataFrame => DataFrame = identity): Long = {
     val spark = data.sparkSession
     checkExpectations(data, expectations, dir)
-    versions(spark, dir).lastOption.foreach { v =>
-      if (readManifest(spark, dir, v).deletes.nonEmpty)
-        applyDeletes(spark, dir): Unit
-    }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"REPLACE WHERE on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    applyDeletes(spark, dir)
+    transact(spark, dir, "REPLACE WHERE") { m =>
       require(m.deletes.isEmpty,
         s"REPLACE WHERE on $dir raced a merge-on-read delete — re-run")
       val classified = m.entries.map(e =>
@@ -3622,21 +3499,8 @@ object SnapshotTable {
       val incoming = survivors
         .map(_.unionByName(data, allowMissingColumns = true))
         .getOrElse(data)
-      val batchFiles = writeBatch(shape(incoming), dir)
-      val tableStats = (m.statsCols ++ statsCols).distinct
-      val tableBlooms = (m.bloomCols ++ bloomCols).distinct
-      val newEntries = batchEntries(spark, dir, batchFiles, tableStats,
-        tableBlooms, m.bloomFpp, bucket)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, tableStats,
-          kept ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = tableBlooms, bloomFpp = m.bloomFpp,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-      dropOrphanBatch(spark, dir, batchFiles)
-    }
-    -1L // unreachable
+      rewrite(dir, declare(m, statsCols, bloomCols), kept, shape(incoming), bucket)
+    }.merge
   }
 
   /** DYNAMIC PARTITION OVERWRITE's commit half: replace exactly the
@@ -3657,19 +3521,8 @@ object SnapshotTable {
     // WHERE — a dynamic overwrite must not be the one write path that
     // bypasses the table's declared invariants
     checkExpectationsFiles(spark, dir, newFiles, expectations)
-    versions(spark, dir).lastOption.foreach { v =>
-      if (readManifest(spark, dir, v).deletes.nonEmpty)
-        applyDeletes(spark, dir): Unit
-    }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"dynamic overwrite on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    applyDeletes(spark, dir)
+    transact(spark, dir, "dynamic overwrite") { m =>
       require(m.deletes.isEmpty,
         s"dynamic overwrite on $dir raced a merge-on-read delete — re-run")
       val classified = m.entries.map(e =>
@@ -3680,20 +3533,11 @@ object SnapshotTable {
         if (boundary.isEmpty) Nil
         else writeBatch(shape(entriesFrame(spark, dir, m, boundary)
           .filter(!coalesce(rowPred, lit(false)))), dir)
-      val tableStats = (m.statsCols ++ statsCols).distinct
-      val tableBlooms = (m.bloomCols ++ bloomCols).distinct
-      val newEntries = batchEntries(spark, dir, survivorFiles ++ newFiles,
-        tableStats, tableBlooms, m.bloomFpp, bucket)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, tableStats,
-          kept ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = tableBlooms, bloomFpp = m.bloomFpp,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-      dropOrphanBatch(spark, dir, survivorFiles)
-    }
-    -1L // unreachable
+      // the incoming files are the executors' (they survive a lost
+      // race); only the survivor rewrite is this attempt's own
+      Publish(withFiles(spark, dir, declare(m, statsCols, bloomCols), kept,
+        survivorFiles ++ newFiles, bucket), staged = survivorFiles)
+    }.merge
   }
 
   /** The SQL row-level copy-on-write commit (DSv2 ReplaceData):
@@ -3709,34 +3553,26 @@ object SnapshotTable {
       spark: SparkSession, dir: String, basedOn: Long,
       replaced: Set[String], newFiles: Seq[String],
       bucket: Option[(String, Int)] = None): Long = {
-    val headV = versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-    require(headV == basedOn,
+    val m = manifestAt(spark, dir)
+    require(m.version == basedOn,
       s"concurrent commit on $dir during SQL DML (scanned v$basedOn, head is " +
-        s"v$headV): aborting — re-run the command against the new head")
-    val m = readManifest(spark, dir, headV)
+        s"v${m.version}): aborting — re-run the command against the new head")
     require(m.deletes.isEmpty,
       s"SQL DML on $dir with merge-on-read deletes pending — fold them first " +
         "(SnapshotTable.applyDeletes or maintainTable)")
     val missing = replaced.filterNot(r => m.entries.exists(_.path == r))
     require(missing.isEmpty,
       s"SQL DML on $dir would replace files no longer live: ${missing.mkString(", ")}")
-    val untouched = m.entries.filterNot(e => replaced.contains(e.path))
     // `bucket` = the table's declared layout when the DML write landed
     // its replacement files bucket-clustered (the write requested
     // hash(col)%n distribution): record the __bucket stat per new file
     // so storage-partitioned joins stay armed THROUGH DELETE/UPDATE/
     // MERGE instead of downgrading until a manual CALL rebucket
-    val newEntries = batchEntries(spark, dir, newFiles, m.statsCols,
-      m.bloomCols, m.bloomFpp, bucket = bucket)
-    require(tryPublish(spark, dir,
-      Manifest(headV + 1, m.ledger, m.statsCols,
-        untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-        bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-        deletes = m.deletes, renames = m.renames, drops = m.drops, adds = m.adds),
-      carry = m.segments),
+    val next = withFiles(spark, dir, m,
+      m.entries.filterNot(e => replaced.contains(e.path)), newFiles, bucket)
+    require(tryPublish(spark, dir, next.copy(version = m.version + 1)),
       s"concurrent commit on $dir during SQL DML publish: aborting — re-run")
-    headV + 1
+    m.version + 1
   }
 
   /** The streaming-SINK commit (DSv2 `writeStream.format(
@@ -3766,50 +3602,24 @@ object SnapshotTable {
       overwrite: Boolean = false): Option[Long] = {
     require(appId.nonEmpty && !appId.contains(":"),
       s"appId must be non-empty without ':' — got '$appId'")
-    var attempts = 0
     var opsAtFirstRead: (Seq[Rename], Seq[Drop]) = null
-    var newEntries: Seq[Entry] = null
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"streaming sink commit on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(0L)
-      val m =
-        if (headV == 0L) Manifest(0L, Ledger(), statsCols, Nil,
-          bloomCols = bloomCols)
-        else readManifest(spark, dir, headV)
-      if (m.ledger.contains(appId, batchId)) {
-        if (relPaths.nonEmpty) dropOrphanBatch(spark, dir, relPaths)
-        return None
+    val entriesOf = stagedEntries(spark, dir, relPaths)
+    transact(spark, dir, "streaming sink commit", create = true) { m =>
+      if (m.ledger.contains(appId, batchId)) NoCommit(orphans = relPaths)
+      else {
+        if (opsAtFirstRead == null) opsAtFirstRead = (m.renames, m.drops)
+        else require((m.renames, m.drops) == opsAtFirstRead,
+          s"streaming sink commit on $dir raced a schema evolution — the " +
+            "batch files carry pre-evolution names; restart the query")
+        // sticky-union like commitBatch: a caller-declared stat/bloom
+        // column (the sink's TBLPROPERTIES/options) joins the table's
+        // standing declarations even when the table already exists —
+        // without this a SQL-created table's sink commits would never
+        // record the stats its write-path config asks for
+        val d = declare(m, statsCols, bloomCols).copy(ledger = m.ledger.add(appId, batchId))
+        Publish(landed(d, entriesOf(d).map(_.copy(seq = m.version + 1)), overwrite))
       }
-      if (opsAtFirstRead == null) opsAtFirstRead = (m.renames, m.drops)
-      else require((m.renames, m.drops) == opsAtFirstRead,
-        s"streaming sink commit on $dir raced a schema evolution — the " +
-          "batch files carry pre-evolution names; restart the query")
-      // sticky-union like commitBatch: a caller-declared stat/bloom
-      // column (the sink's TBLPROPERTIES/options) joins the table's
-      // standing declarations even when the table already exists —
-      // without this a SQL-created table's sink commits would never
-      // record the stats its write-path config asks for
-      val tableStats = (m.statsCols ++ statsCols).distinct
-      val tableBlooms = (m.bloomCols ++ bloomCols).distinct
-      if (newEntries == null)
-        newEntries = batchEntries(spark, dir, relPaths, tableStats,
-          tableBlooms, m.bloomFpp)
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger.add(appId, batchId), tableStats,
-          (if (overwrite) Nil else m.entries) ++
-            newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = tableBlooms, bloomFpp = m.bloomFpp,
-          deletes = if (overwrite) Nil else m.deletes,
-          renames = if (overwrite) Nil else m.renames,
-          drops = if (overwrite) Nil else m.drops,
-          adds = if (overwrite) Nil else m.adds),
-        carry = if (overwrite) Nil else m.segments))
-        return Some(headV + 1)
-    }
-    None // unreachable
+    }.toOption
   }
 
   /** DELETE by key, MERGE-ON-READ: commit only a delta-sized key file
@@ -3876,88 +3686,66 @@ object SnapshotTable {
       require(ps.nonEmpty, "delete key frame wrote no files")
       ps
     }
-    var paths: Seq[String] = null
+    var paths: Seq[String] = Nil
     var keySchema: StructType = null // the key files', read from their footers
     var curCols: Seq[String] = keyCols // the names the key FILES carry
     var opsAtWrite: (Seq[Rename], Seq[Drop]) = null
     var nKeys = -1L
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"MoR delete on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
-      if (streamKey.exists(m.ledger.containsKey)) {
-        if (paths != null) dropOrphanBatch(spark, dir, paths)
-        return None
-      }
+    transact(spark, dir, "MoR delete") { m =>
       val headOps = (m.renames, m.drops)
-      if (paths == null) {
-        // key files written AFTER the first head read: opsAtWrite is
-        // exactly the schema-op state their column names reflect.
-        // The key census rides the write action as an observed metric
-        // (guide §1/§2.3: one pass, not a write plus a re-read count)
-        val obs = new org.apache.spark.sql.Observation()
-        paths = writeKeys(keys.select(keyCols.map(col): _*).distinct()
-          .observe(obs, count(lit(1)).as("__graft_nkeys")))
-        keySchema = filesSchema(spark, dir, paths)
-        opsAtWrite = headOps
-        nKeys = obs.get("__graft_nkeys").asInstanceOf[Long]
-      } else if (opsAtWrite != headOps) {
-        // a racing writer committed a rename/drop after our key files
-        // were written: recorded as-is, the delete's keyCols would
-        // carry PRE-op names with seq AFTER the op, so currentName
-        // never maps them and the retraction silently stops applying
-        // (ADVICE r11 — the GDPR path). Remap key files/columns under
-        // the current names; a concurrent DROP of a key column is
-        // unrecordable and fails loudly.
-        require(headOps._1.take(opsAtWrite._1.size) == opsAtWrite._1 &&
-          headOps._2.take(opsAtWrite._2.size) == opsAtWrite._2,
-          s"MoR delete on $dir raced a RESTORE that rewound schema history — " +
-            "retry the delete against the restored head")
-        val newOps = (headOps._1.drop(opsAtWrite._1.size)
-          .map(Left(_): Either[Rename, Drop]) ++
-          headOps._2.drop(opsAtWrite._2.size)
-            .map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
-        val mapped = curCols.map { c0 =>
-          newOps.foldLeft(c0) {
-            case (n, Left(r)) => if (r.from == n) r.to else n
-            case (n, Right(d)) =>
-              require(d.name != n,
-                s"MoR delete on $dir raced a DROP of key column '$n' — the " +
-                  "retraction cannot be recorded against a dropped column")
-              n
-          }
-        }
-        if (mapped != curCols) {
-          val kf = curCols.zip(mapped)
-            .foldLeft(spark.read.schema(keySchema)
-              .parquet(paths.map(p => s"$dir/$p"): _*)) {
-              case (df, (o, n)) =>
-                if (o == n) df else df.withColumnRenamed(o, n)
-            }
-          val stale = paths
-          paths = writeKeys(kf)
+      if (streamKey.exists(m.ledger.containsKey)) NoCommit(orphans = paths)
+      else {
+        if (opsAtWrite == null) {
+          // key files written AFTER the first head read: opsAtWrite is
+          // exactly the schema-op state their column names reflect.
+          // The key census rides the write action as an observed metric
+          // (guide §1/§2.3: one pass, not a write plus a re-read count)
+          val obs = new org.apache.spark.sql.Observation()
+          paths = writeKeys(keys.select(keyCols.map(col): _*).distinct()
+            .observe(obs, count(lit(1)).as("__graft_nkeys")))
           keySchema = filesSchema(spark, dir, paths)
-          dropOrphanBatch(spark, dir, stale)
-          curCols = mapped
+          opsAtWrite = headOps
+          nKeys = obs.get("__graft_nkeys").asInstanceOf[Long]
+        } else if (opsAtWrite != headOps) {
+          // a racing writer committed a rename/drop after our key files
+          // were written: recorded as-is, the delete's keyCols would
+          // carry PRE-op names with seq AFTER the op, so currentName
+          // never maps them and the retraction silently stops applying
+          // (ADVICE r11 — the GDPR path). Remap key files/columns under
+          // the current names; a concurrent DROP of a key column is
+          // unrecordable and fails loudly.
+          val newOps = opsSince(dir, "MoR delete", opsAtWrite, m)
+          val mapped = curCols.map { c0 =>
+            newOps.foldLeft(c0) {
+              case (n, Left(r)) => if (r.from == n) r.to else n
+              case (n, Right(d)) =>
+                require(d.name != n,
+                  s"MoR delete on $dir raced a DROP of key column '$n' — the " +
+                    "retraction cannot be recorded against a dropped column")
+                n
+            }
+          }
+          if (mapped != curCols) {
+            val kf = curCols.zip(mapped)
+              .foldLeft(spark.read.schema(keySchema)
+                .parquet(paths.map(p => s"$dir/$p"): _*)) {
+                case (df, (o, n)) =>
+                  if (o == n) df else df.withColumnRenamed(o, n)
+              }
+            val stale = paths
+            paths = writeKeys(kf)
+            keySchema = filesSchema(spark, dir, paths)
+            dropOrphanBatch(spark, dir, stale)
+            curCols = mapped
+          }
+          opsAtWrite = headOps
         }
-        opsAtWrite = headOps
+        // zero data files touched: every segment carries
+        Publish(m.copy(ledger = streamKey.fold(m.ledger)(m.ledger.addKey),
+          deletes = m.deletes :+ DeleteFile(paths, curCols, m.version + 1, nKeys,
+            schema = Some(keySchema))))
       }
-      val next = headV + 1
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(next,
-          streamKey.fold(m.ledger)(m.ledger.addKey), m.statsCols, m.entries,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes :+
-            DeleteFile(paths, curCols, next, nKeys, schema = Some(keySchema)),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // zero data files touched: all carry
-        return Some(next)
-    }
-    None // unreachable
+    }.toOption
   }
 
   /** Streaming UPSERT, merge-on-read: the micro-batch's rows APPEND
@@ -3990,7 +3778,7 @@ object SnapshotTable {
       s"appId must be non-empty without ':' — got '$appId'")
     if (isBatchCommitted(batch.sparkSession, dir, batchId, appId)) None
     else commitUpsertMoRInternal(batch, dir, keyCols,
-      Some(s"$appId:$batchId"), statsCols, bloomCols, expectations)
+      Some(s"$appId:$batchId"), statsCols, bloomCols, expectations).toOption
   }
 
   /** The BATCH face of the merge-on-read upsert — `commitStreamUpsertMoR`
@@ -4005,8 +3793,7 @@ object SnapshotTable {
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       expectations: Seq[(String, String)] = Nil): Long =
     commitUpsertMoRInternal(batch, dir, keyCols, None,
-      statsCols, bloomCols, expectations)
-      .getOrElse(versions(batch.sparkSession, dir).lastOption.getOrElse(0L))
+      statsCols, bloomCols, expectations).merge
 
   /** The SINK face of the merge-on-read upsert: the epoch's files are
     * already staged by the executor writers — read them for the key
@@ -4027,15 +3814,17 @@ object SnapshotTable {
     }
     val df = rawRead(spark, dir, relPaths.map(Entry(_, Map.empty)))
     commitUpsertMoRInternal(df, dir, keyCols, Some(s"$appId:$batchId"),
-      statsCols, bloomCols, expectations, preStaged = Some(relPaths))
+      statsCols, bloomCols, expectations, preStaged = Some(relPaths)).toOption
   }
 
+  /** Left(head version) when the epoch lands nothing: a recognized
+    * replay (its staged files swept) or a zero-row batch. */
   private def commitUpsertMoRInternal(
       batch: DataFrame, dir: String, keyCols: Seq[String],
       streamKey: Option[String],
       statsCols: Seq[String], bloomCols: Seq[String],
       expectations: Seq[(String, String)],
-      preStaged: Option[Seq[String]] = None): Option[Long] = {
+      preStaged: Option[Seq[String]] = None): Either[Long, Long] = {
     val spark = batch.sparkSession
     require(keyCols.nonEmpty, "commitUpsertMoR needs key columns")
     require(keyCols.forall(!_.startsWith("__graft_dv")),
@@ -4043,85 +3832,65 @@ object SnapshotTable {
     keyCols.foreach(c => require(batch.columns.contains(c),
       s"stream upsert on $dir: key column '$c' is not in the batch"))
     checkExpectations(batch, expectations, dir)
-    var batchFiles: Seq[String] = null
-    var newEntries: Seq[Entry] = null
+    var batchFiles: Seq[String] = preStaged.getOrElse(Nil)
+    var entriesOf: Manifest => Seq[Entry] = null
+    var nRows = -1L
     var nKeys = -1L
     var opsAtWrite: (Seq[Rename], Seq[Drop]) = null
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"stream upsert on $dir lost 20 straight races; giving up")
-      // first epoch CREATES the table (a streaming sink's contract):
-      // v1 is a plain ledgered append — no prior files, no delete
-      val headV = versions(spark, dir).lastOption.getOrElse(0L)
-      val m =
-        if (headV == 0L) Manifest(0L, Ledger(), Seq.empty, Seq.empty)
-        else readManifest(spark, dir, headV)
-      if (streamKey.exists(m.ledger.containsKey)) {
-        if (batchFiles != null) dropOrphanBatch(spark, dir, batchFiles)
-        else preStaged.foreach(dropOrphanBatch(spark, dir, _))
-        return None
-      }
-      val headOps = (m.renames, m.drops)
-      if (batchFiles == null) {
-        val tableStats = (m.statsCols ++ statsCols).distinct
-        val tableBlooms = (m.bloomCols ++ bloomCols).distinct
-        batchFiles = preStaged.getOrElse(writeBatch(batch, dir))
-        newEntries = batchEntries(spark, dir, batchFiles, tableStats,
-          tableBlooms, m.bloomFpp)
-        // the row census is the entries' footer counts — no aggregate
-        // job; a zero-row epoch must not leave its empty files behind
-        val nRows = newEntries.map(_.rows).sum
-        if (nRows == 0L) {
-          dropOrphanBatch(spark, dir, batchFiles)
-          return None
-        }
-        // the epoch's own committed files ARE the delete's key frame:
-        // one image per key (checked right here) means their key
-        // columns hold exactly the doomed keys, each once, and every
-        // reader of a delete's paths already column-prunes to keyCols
-        // — so a second key-only write would duplicate both
-        // the I/O and the storage and double the epoch's file count
-        // for nothing. Sequence scoping keeps it sound: the delete
-        // (seq = next) applies only to entries with seq < next, never
-        // to the files it names. The uniqueness census is one
-        // column-pruned aggregate over the just-written files
-        // (count_distinct of the key STRUCT matches distinct().count()
-        // bit-for-bit — a struct with null fields is itself non-null,
-        // so null keys count exactly as row-distinct did).
-        nKeys = rawRead(spark, dir, newEntries)
-          .agg(count_distinct(struct(keyCols.map(col): _*)).as("k"))
-          .head().getLong(0)
-        if (nRows != nKeys) {
-          // contract violation must not leave this call's files behind
-          if (preStaged.isEmpty) dropOrphanBatch(spark, dir, batchFiles)
-          require(nRows == nKeys,
-            s"stream upsert on $dir: the batch carries $nRows rows over " +
-              s"$nKeys distinct keys ${keyCols.mkString("(", ",", ")")} — " +
-              "an upsert needs ONE image per key; dedupe the batch " +
-              "(latest-wins is the caller's call, not the table's)")
-        }
-        opsAtWrite = headOps
-      } else require(opsAtWrite == headOps,
-        s"stream upsert on $dir raced a column rename/drop — re-run the " +
-          "epoch (exactly-once makes the retry safe)")
-      val next = headV + 1
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(next, streamKey.fold(m.ledger)(m.ledger.addKey),
-          (m.statsCols ++ statsCols).distinct,
-          m.entries ++ newEntries.map(_.copy(seq = next)),
-          bloomCols = (m.bloomCols ++ bloomCols).distinct,
-          bloomFpp = m.bloomFpp,
+    // first epoch CREATES the table (a streaming sink's contract): v1
+    // is a plain ledgered append — no prior files, no delete
+    transact(spark, dir, "stream upsert", create = true) { m =>
+      val d = declare(m, statsCols, bloomCols)
+      if (streamKey.exists(m.ledger.containsKey)) NoCommit(orphans = batchFiles)
+      else {
+        if (opsAtWrite == null) {
+          batchFiles = preStaged.getOrElse(writeBatch(batch, dir))
+          entriesOf = stagedEntries(spark, dir, batchFiles)
+          opsAtWrite = (m.renames, m.drops)
+          // the row census is the entries' footer counts — no aggregate
+          // job; a zero-row epoch must not leave its empty files behind
+          nRows = entriesOf(d).map(_.rows).sum
+          // the epoch's own committed files ARE the delete's key frame:
+          // one image per key (checked right here) means their key
+          // columns hold exactly the doomed keys, each once, and every
+          // reader of a delete's paths already column-prunes to keyCols
+          // — so a second key-only write would duplicate both
+          // the I/O and the storage and double the epoch's file count
+          // for nothing. Sequence scoping keeps it sound: the delete
+          // (seq = next) applies only to entries with seq < next, never
+          // to the files it names. The uniqueness census is one
+          // column-pruned aggregate over the just-written files
+          // (count_distinct of the key STRUCT matches distinct().count()
+          // bit-for-bit — a struct with null fields is itself non-null,
+          // so null keys count exactly as row-distinct did).
+          if (nRows > 0L) {
+            nKeys = rawRead(spark, dir, entriesOf(d))
+              .agg(count_distinct(struct(keyCols.map(col): _*)).as("k"))
+              .head().getLong(0)
+            if (nRows != nKeys) {
+              // contract violation must not leave this call's files behind
+              if (preStaged.isEmpty) dropOrphanBatch(spark, dir, batchFiles)
+              require(nRows == nKeys,
+                s"stream upsert on $dir: the batch carries $nRows rows over " +
+                  s"$nKeys distinct keys ${keyCols.mkString("(", ",", ")")} — " +
+                  "an upsert needs ONE image per key; dedupe the batch " +
+                  "(latest-wins is the caller's call, not the table's)")
+            }
+          }
+        } else require(opsAtWrite == ((m.renames, m.drops)),
+          s"stream upsert on $dir raced a column rename/drop — re-run the " +
+            "epoch (exactly-once makes the retry safe)")
+        val next = m.version + 1
+        val fresh = entriesOf(d).map(_.copy(seq = next))
+        if (nRows == 0L) NoCommit(orphans = batchFiles)
+        else Publish(d.copy(ledger = streamKey.fold(m.ledger)(m.ledger.addKey),
+          entries = m.entries ++ fresh,
           deletes =
             if (m.entries.isEmpty) m.deletes // no prior files to doom
             else m.deletes :+ DeleteFile(batchFiles, keyCols, next, nKeys,
-              schema = Some(entriesSchema(spark, dir, newEntries))),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return Some(next)
+              schema = Some(entriesSchema(spark, dir, fresh)))))
+      }
     }
-    None // unreachable
   }
 
   /** DELETE by PREDICATE, merge-on-read via a POSITIONAL DELETE
@@ -4153,42 +3922,22 @@ object SnapshotTable {
     * nothing (no empty commit). */
   def commitDeleteVectorsWhere(
       spark: SparkSession, dir: String, predicate: Column): Long = {
-    var staged: Seq[String] = null
-    var affected: Seq[(String, Long)] = null
-    var total = -1L
+    var vector: Option[StagedVector] = None
     var fingerprint: (Set[String], Seq[DeleteFile]) = null
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"DV delete on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "DV delete") { m =>
       // positions are location-derived, not column-derived, so a raced
       // schema op never invalidates them — only the entry set and the
       // delete list fingerprint the staged vector
       val fp = (m.entries.map(_.path).toSet, m.deletes)
-      if (staged == null || fingerprint != fp) {
-        if (staged != null) dropOrphanBatch(spark, dir, staged)
-        staged = null; affected = null; total = -1L
+      if (fingerprint != fp) {
+        vector.foreach(v => dropOrphanBatch(spark, dir, v.paths))
         fingerprint = fp
-        stageVector(spark, dir, m, headV, predicate, "DV delete") match {
-          case None => return headV
-          case Some((_, _, ps, aff, tot)) =>
-            staged = ps; affected = aff; total = tot
-        }
+        vector = stageVector(spark, dir, m, predicate, "DV delete")
       }
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols, m.entries,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes :+
-            DeleteFile(staged, Seq(DvPosCol), headV + 1, total, affected),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // zero data files touched: all carry
-        return headV + 1
-    }
-    -1L // unreachable
+      // zero data files touched: every segment carries
+      vector.fold[Attempt](NoCommit())(v =>
+        Publish(m.copy(deletes = m.deletes :+ v.record(m.version + 1))))
+    }.merge
   }
 
   /** UPDATE by PREDICATE via a delete vector + append, as ONE commit:
@@ -4212,26 +3961,12 @@ object SnapshotTable {
       sets: Map[String, Column],
       expectations: Seq[(String, String)] = Nil): Long = {
     require(sets.nonEmpty, "commitUpdateVectorsWhere needs at least one SET")
-    var staged: Seq[String] = null        // the vector files
-    var stagedBatch: Seq[String] = null   // the updated-image batch
-    var newEntries: Seq[Entry] = null
-    var affected: Seq[(String, Long)] = null
-    var total = -1L
+    var vector: Option[StagedVector] = None
+    var images: Seq[String] = Nil // the updated-image batch
+    var entriesOf: Manifest => Seq[Entry] = null
     var fingerprint: (Set[String], Seq[DeleteFile],
       Seq[Rename], Seq[Drop], Seq[AddCol]) = null
-    var attempts = 0
-    def dropStaged(): Unit = {
-      if (staged != null) dropOrphanBatch(spark, dir, staged)
-      if (stagedBatch != null) dropOrphanBatch(spark, dir, stagedBatch)
-      staged = null; stagedBatch = null; newEntries = null
-      affected = null; total = -1L
-    }
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"DV update on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "DV update") { m =>
       // UNLIKE the pure delete, the staged image batch is
       // column-derived: a raced rename/drop/add would make images
       // written under the OLD names publish with a post-op seq, so
@@ -4241,51 +3976,51 @@ object SnapshotTable {
       // by recompute instead of remap)
       val fp = (m.entries.map(_.path).toSet, m.deletes,
         m.renames, m.drops, m.adds)
-      if (staged == null || fingerprint != fp) {
-        dropStaged()
+      if (fingerprint != fp) {
+        vector.foreach(v => dropOrphanBatch(spark, dir, v.paths))
+        dropOrphanBatch(spark, dir, images)
+        images = Nil
         fingerprint = fp
-        stageVector(spark, dir, m, headV, predicate, "DV update") match {
-          case None => return headV
-          case Some((mf, pruned, ps, aff, tot)) =>
-            staged = ps; affected = aff; total = tot
-            val matched = entriesFrameMeta(spark, dir, mf, pruned,
-              keepMeta = true).filter(predicate).drop(DvNameCol, DvPosCol)
-            sets.keys.foreach(c => require(matched.columns.contains(c),
-              s"DV update on $dir: SET names '$c', which is not a column " +
-                "of the table"))
-            // SQL UPDATE semantics: EVERY SET evaluates against the
-            // OLD row (one select, deterministic whatever the map
-            // order — a sequential withColumn fold would let one
-            // assignment read another's NEW value), and each
-            // assignment CASTS to the column's standing type (an
-            // UPDATE never retypes a column — an INT-literal SET on a
-            // BIGINT column must not land an INT32 image file that
-            // poisons the merged read schema)
-            val updated = matched.select(matched.columns.map(c =>
-              sets.get(c).map(_.cast(matched.schema(c).dataType).as(c))
-                .getOrElse(col(c))): _*)
-            checkExpectations(updated, expectations, dir)
-            stagedBatch = writeBatch(updated, dir)
-            newEntries = batchEntries(spark, dir, stagedBatch, m.statsCols,
-              m.bloomCols, m.bloomFpp)
-            val batchRows = newEntries.map(_.rows).sum
-            require(batchRows == total,
-              s"DV update on $dir: the updated batch carries $batchRows rows " +
-                s"but the vector marks $total — snapshot drifted mid-compute; re-run")
+        vector = stageVector(spark, dir, m, predicate, "DV update")
+        vector.foreach { v =>
+          val matched = entriesFrameMeta(spark, dir, v.view, v.pruned,
+            keepMeta = true).filter(predicate).drop(DvNameCol, DvPosCol)
+          sets.keys.foreach(c => require(matched.columns.contains(c),
+            s"DV update on $dir: SET names '$c', which is not a column " +
+              "of the table"))
+          // SQL UPDATE semantics: EVERY SET evaluates against the
+          // OLD row (one select, deterministic whatever the map
+          // order — a sequential withColumn fold would let one
+          // assignment read another's NEW value), and each
+          // assignment CASTS to the column's standing type (an
+          // UPDATE never retypes a column — an INT-literal SET on a
+          // BIGINT column must not land an INT32 image file that
+          // poisons the merged read schema)
+          val updated = matched.select(matched.columns.map(c =>
+            sets.get(c).map(_.cast(matched.schema(c).dataType).as(c))
+              .getOrElse(col(c))): _*)
+          checkExpectations(updated, expectations, dir)
+          images = writeBatch(updated, dir)
+          entriesOf = stagedEntries(spark, dir, images)
+          val batchRows = entriesOf(m).map(_.rows).sum
+          require(batchRows == v.total,
+            s"DV update on $dir: the updated batch carries $batchRows rows " +
+              s"but the vector marks ${v.total} — snapshot drifted mid-compute; re-run")
         }
       }
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          m.entries ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes :+
-            DeleteFile(staged, Seq(DvPosCol), headV + 1, total, affected),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-    }
-    -1L // unreachable
+      vector.fold[Attempt](NoCommit())(v =>
+        Publish(m.copy(entries = m.entries ++ entriesOf(m).map(_.copy(seq = m.version + 1)),
+          deletes = m.deletes :+ v.record(m.version + 1))))
+    }.merge
+  }
+
+  /** A staged delete vector: the manifest view and candidate entries
+    * it was computed over, its files, and its per-file census. */
+  private final case class StagedVector(
+      view: Manifest, pruned: Seq[Entry], paths: Seq[String],
+      affected: Seq[(String, Long)], total: Long) {
+    def record(seq: Long): DeleteFile =
+      DeleteFile(paths, Seq(DvPosCol), seq, total, affected)
   }
 
   /** Shared staging for the vector commits: validates the
@@ -4295,16 +4030,14 @@ object SnapshotTable {
     * per-file. Staged under the `delete-` prefix so a crashed
     * writer's files fall to the SAME gcOrphans sweep as equality key
     * files. Returns None when nothing matches (staged files already
-    * cleaned); Some((pruned manifest view, candidate entries, vector
-    * paths, affected path→count, total)) otherwise. */
+    * cleaned). */
   private def stageVector(
-      spark: SparkSession, dir: String, m: Manifest, headV: Long,
-      predicate: Column, what: String)
-      : Option[(Manifest, Seq[Entry], Seq[String], Seq[(String, Long)], Long)] = {
+      spark: SparkSession, dir: String, m: Manifest,
+      predicate: Column, what: String): Option[StagedVector] = {
     val f = fs(spark, dir)
     // the helper columns must not collide with table columns, and no
     // physical column may shadow the reader's metadata struct
-    val tableCols = read(spark, dir, Some(headV)).columns.toSet
+    val tableCols = read(spark, dir, Some(m.version)).columns.toSet
     require(Seq(DvNameCol, DvPosCol, "_metadata").forall(!tableCols.contains(_)),
       s"$what on $dir: the table schema collides with the reserved " +
         s"'$DvNameCol'/'$DvPosCol'/'_metadata' names")
@@ -4317,7 +4050,7 @@ object SnapshotTable {
     require(allNames.distinct.size == allNames.size,
       s"$what on $dir: duplicate data-file NAMES in the manifest — " +
         "compact/OPTIMIZE to re-land them before using delete vectors")
-    val (_, mf, pruned) = pruneWhere(spark, dir, predicate, Some(headV))
+    val (_, mf, pruned) = pruneWhere(spark, dir, predicate, Some(m.version))
     if (pruned.isEmpty) return None
     val posFrame = entriesFrameMeta(spark, dir, mf, pruned, keepMeta = true)
       .filter(predicate)
@@ -4345,7 +4078,7 @@ object SnapshotTable {
       byName.getOrElse(n, throw new IllegalStateException(
         s"$what on $dir marked positions in unknown file '$n'")) -> c
     }.sortBy(_._1)
-    Some((mf, pruned, ps, affected, affected.map(_._2).sum))
+    Some(StagedVector(mf, pruned, ps, affected, affected.map(_._2).sum))
   }
 
   /** The pending delete VECTORS of a version (default head):
@@ -4355,9 +4088,7 @@ object SnapshotTable {
   def pendingDeleteVectors(
       spark: SparkSession, dir: String, version: Option[Long] = None)
       : Seq[(Long, Long, Seq[(String, Long)])] = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    readManifest(spark, dir, version.getOrElse(vs.last)).deletes
+    manifestAt(spark, dir, version).deletes
       .filter(isDv).map(d => (d.seq, d.rows, d.dvFiles))
   }
 
@@ -4384,10 +4115,8 @@ object SnapshotTable {
   def cloneTable(
       spark: SparkSession, srcDir: String, dstDir: String,
       version: Option[Long] = None): Long = {
-    val vs = versions(spark, srcDir)
-    require(vs.nonEmpty, s"snapshot table $srcDir has no committed version")
-    val v = version.getOrElse(vs.last)
-    val m = readManifest(spark, srcDir, v)
+    val m = manifestAt(spark, srcDir, version)
+    val v = m.version
     require(m.deletes.isEmpty,
       s"cloneTable: $srcDir@$v carries pending merge-on-read deletes, whose " +
         "sequence scoping is ledger-relative and does not transplant — run " +
@@ -4412,9 +4141,8 @@ object SnapshotTable {
       }
       e.copy(path = abs, seq = 0L)
     }
-    require(tryPublish(spark, dstDir,
-      Manifest(1L, Ledger(), m.statsCols, ext,
-        bloomCols = m.bloomCols, bloomFpp = m.bloomFpp)),
+    require(tryPublish(spark, dstDir, Empty.copy(version = 1L, statsCols = m.statsCols,
+      entries = ext, bloomCols = m.bloomCols, bloomFpp = m.bloomFpp)),
       s"cloneTable lost a creation race on $dstDir")
     // provenance for publishClone: which table AND VERSION this clone
     // staged — the optimistic-concurrency pin write-audit-publish
@@ -4481,21 +4209,18 @@ object SnapshotTable {
     val targetCanon = qualifiedPath(spark, targetDir)
     require(provSrc == targetCanon,
       s"publishClone: $stagingDir was cloned from $provSrc, not $targetCanon")
-    val svs = versions(spark, stagingDir)
-    require(svs.nonEmpty, s"staging table $stagingDir has no committed version")
-    val sm = readManifest(spark, stagingDir, svs.last)
+    val sm = manifestAt(spark, stagingDir)
     require(sm.deletes.isEmpty,
       s"publishClone: $stagingDir carries pending merge-on-read deletes — " +
         "run applyDeletes (CALL system.fold_deletes) before publishing")
     require(schemaOps(sm).forall(op => sm.entries.forall(_.seq >= opSeq(op))),
       s"publishClone: $stagingDir has files still subject to a column " +
         "rename/drop — compact/OPTIMIZE the staging table first")
-    val tvs = versions(spark, targetDir)
-    require(tvs.nonEmpty && tvs.last == provV,
-      s"publishClone: $targetDir moved to ${tvs.lastOption.getOrElse(-1L)} " +
+    val tm = manifestAt(spark, targetDir)
+    require(tm.version == provV,
+      s"publishClone: $targetDir moved to ${tm.version} " +
         s"since the clone pinned $provV — a concurrent commit landed; " +
         "re-clone, re-stage, re-audit")
-    val tm = readManifest(spark, targetDir, tvs.last)
     val f = fs(spark, targetDir)
     val sfs = fs(spark, stagingDir)
     val batch = s"batch-wap-${UUID.randomUUID()}"
@@ -4554,9 +4279,9 @@ object SnapshotTable {
     // content fully replaces: schema-op lists clear (the staged census
     // carries final names), target's ledger carries (its streaming
     // writers' exactly-once state survives the publish)
-    if (!tryPublish(spark, targetDir,
-      Manifest(tvs.last + 1, tm.ledger, sm.statsCols, published,
-        bloomCols = sm.bloomCols, bloomFpp = sm.bloomFpp))) {
+    if (!tryPublish(spark, targetDir, Empty.copy(version = tm.version + 1,
+      ledger = tm.ledger, statsCols = sm.statsCols, entries = published,
+      bloomCols = sm.bloomCols, bloomFpp = sm.bloomFpp))) {
       f.delete(new Path(s"$targetDir/$batch"), true): Unit
       throw new IllegalStateException(
         s"publishClone: a commit raced onto $targetDir during the publish — " +
@@ -4570,7 +4295,7 @@ object SnapshotTable {
     // the TARGET tree belongs to the target now; the carcass holds no
     // live files and gc_dropped sweeps it past the grace)
     markDropped(spark, stagingDir)
-    tvs.last + 1
+    tm.version + 1
   }
 
   /** Fold every pending merge-on-read delete into the data and clear
@@ -4585,15 +4310,8 @@ object SnapshotTable {
     * themselves stay on disk for time travel until vacuum. Returns
     * the committed version (the current head when no deletes are
     * pending). */
-  def applyDeletes(spark: SparkSession, dir: String): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"applyDeletes on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
-      if (m.deletes.isEmpty) return headV
+  def applyDeletes(spark: SparkSession, dir: String): Long =
+    transact(spark, dir, "applyDeletes") { m =>
       val touched = m.deletes.flatMap { d =>
         val eligible = m.entries.filter(_.seq < d.seq)
         if (eligible.isEmpty) Nil
@@ -4613,33 +4331,14 @@ object SnapshotTable {
           touchedFiles(spark, dir, m, keyFrame, cur, eligible)
         }
       }.groupBy(_.path).map(_._2.head).toSeq
-      if (touched.isEmpty) {
-        // no eligible file holds any doomed key: clearing the list is
-        // a metadata-only commit (logical contents unchanged)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols, m.entries,
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
-      } else {
-        val untouched = m.entries.filterNot(e => touched.exists(_.path == e.path))
-        val rewritten = entriesFrame(spark, dir, m, touched)
-        val batchFiles = writeBatch(rewritten, dir)
-        val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-          m.bloomCols, m.bloomFpp)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols,
-            untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
-        dropOrphanBatch(spark, dir, batchFiles)
-      }
-    }
-    -1L // unreachable
-  }
+      val cleared = m.copy(deletes = Nil)
+      if (m.deletes.isEmpty) NoCommit()
+      // no eligible file holds any doomed key: clearing the list is
+      // a metadata-only commit (logical contents unchanged)
+      else if (touched.isEmpty) Publish(cleared)
+      else rewrite(dir, cleared, m.entries.filterNot(e => touched.exists(_.path == e.path)),
+        entriesFrame(spark, dir, m, touched))
+    }.merge
 
   /** The pending merge-on-read deletes of a version (default head):
     * (key columns, committed seq, recorded key count) per delete —
@@ -4647,9 +4346,7 @@ object SnapshotTable {
   def pendingDeletes(
       spark: SparkSession, dir: String,
       version: Option[Long] = None): Seq[(Seq[String], Long, Long)] = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"snapshot table $dir has no committed version")
-    readManifest(spark, dir, version.getOrElse(vs.last)).deletes
+    manifestAt(spark, dir, version).deletes
       .map(d => (d.keyCols, d.seq, d.rows))
   }
 

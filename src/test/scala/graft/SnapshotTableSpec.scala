@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The snapshot-manifest table format: versioned commits, time
   * travel, optimistic-concurrency retry, and vacuum's liveness rule.
@@ -1511,6 +1512,153 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.testRaceHook = () =>
       if (fired.compareAndSet(false, true)) body
     try run finally SnapshotTable.testRaceHook = () => ()
+  }
+
+  private def idRows(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+    ids.map(i => (i, i * 10)).toDF("id", "v").coalesce(1)
+
+  /** Parquet files under `dir` (relative) that no manifest names. */
+  private def unreferenced(dir: String): Set[String] = {
+    val named = SnapshotTable.versions(spark, dir).flatMap { v =>
+      val m = SnapshotTable.readManifest(spark, dir, v)
+      m.entries.map(_.path) ++ m.deletes.flatMap(_.paths)
+    }.toSet
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map(p => root.relativize(p).toString)
+      .filter(_.endsWith(".parquet")).toSet -- named
+    finally walk.close()
+  }
+
+  /** Stage `ids` as executor-written parquet under `dir/name`. */
+  private def stageFiles(dir: String, name: String, ids: Seq[Long]): Seq[String] = {
+    idRows(ids).write.parquet(s"$dir/$name")
+    new java.io.File(s"$dir/$name").listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).map(n => s"$name/$n").toSeq
+  }
+
+  /** One retrying op of the race matrix: `setup` builds the table (the
+    * default: ids 0..4 and 5..9 in two files, stats on id), `op` runs
+    * the op and returns its version, `expected` is the head's id set
+    * once the racer's rows (100, 101) landed first. */
+  private case class RaceCase(
+      name: String, op: String => Long, expected: Set[Long],
+      setup: String => Unit = dir => {
+        SnapshotTable.commitAppend(idRows(0L until 5L), dir, statsCols = Seq("id"))
+        SnapshotTable.commitAppend(idRows(5L until 10L), dir)
+      })
+
+  private val base = (0L until 10L).toSet
+  private val racer = Set(100L, 101L)
+
+  private val raceCases = Seq(
+    RaceCase("append", SnapshotTable.commitAppend(idRows(Seq(20L)), _), base ++ racer + 20L),
+    RaceCase("overwrite", SnapshotTable.commitOverwrite(idRows(Seq(20L)), _), Set(20L)),
+    RaceCase("stream batch", dir => SnapshotTable.commitStreamBatch(
+      idRows(Seq(20L)), dir, batchId = 0L, appId = "w").get, base ++ racer + 20L),
+    RaceCase("restore", SnapshotTable.restore(spark, _, 1L), (0L until 5L).toSet),
+    RaceCase("rename", SnapshotTable.commitRenameColumn(spark, _, "v", "w"), base ++ racer),
+    RaceCase("drop", SnapshotTable.commitDropColumn(spark, _, "v"), base ++ racer),
+    RaceCase("add column", SnapshotTable.commitAddColumn(
+      spark, _, "x", org.apache.spark.sql.types.LongType), base ++ racer),
+    RaceCase("compactSmallFiles",
+      SnapshotTable.compactSmallFiles(spark, _, 1L << 30, 1L << 30), base ++ racer),
+    RaceCase("compactWhere",
+      SnapshotTable.compactWhere(spark, _, col("id") <= 9L, 1L << 30, 1L << 30)._1,
+      base ++ racer),
+    RaceCase("compactBucketsSmallFiles",
+      SnapshotTable.compactBucketsSmallFiles(spark, _, 1L << 30, 1L << 30, ("id", 2)),
+      base ++ racer,
+      setup = dir => Seq(0L until 5L, 5L until 10L).foreach(ids =>
+        SnapshotTable.commitAppend(idRows(ids).repartition(2, col("id")), dir,
+          bucket = Some(("id", 2))))),
+    RaceCase("merge", SnapshotTable.commitMerge(idRows(Seq(3L, 30L)), _, Seq("id")),
+      base ++ racer + 30L),
+    RaceCase("copy-on-write delete",
+      SnapshotTable.commitDelete(Seq(3L).toDF("id"), _, Seq("id")), base ++ racer - 3L),
+    RaceCase("metadata-only delete", SnapshotTable.deleteFilesWhere(spark, _,
+      SnapshotTable.PredRange("id", None, Some((4L, true)))), (5L until 10L).toSet ++ racer),
+    RaceCase("replace where", SnapshotTable.commitReplaceWhere(idRows(Seq(40L)), _,
+      Some(SnapshotTable.PredRange("id", None, Some((4L, true)))), col("id") <= 4L),
+      (5L until 10L).toSet ++ racer + 40L),
+    RaceCase("dynamic overwrite", dir => SnapshotTable.commitReplacePartitions(spark, dir,
+      stageFiles(dir, "staged-dpo", Seq(41L)),
+      Some(SnapshotTable.PredRange("id", None, Some((4L, true)))), col("id") <= 4L),
+      (5L until 10L).toSet ++ racer + 41L),
+    RaceCase("stream sink files", dir => SnapshotTable.commitStreamFiles(spark, dir,
+      stageFiles(dir, "staged-sink", Seq(42L)), batchId = 1L, appId = "sink").get,
+      base ++ racer + 42L),
+    RaceCase("merge-on-read delete",
+      SnapshotTable.commitDeleteMoR(Seq(3L).toDF("id"), _, Seq("id")), base ++ racer - 3L),
+    RaceCase("stream upsert", dir => SnapshotTable.commitStreamUpsertMoR(
+      idRows(Seq(3L, 43L)), dir, Seq("id"), batchId = 0L).get, base ++ racer + 43L),
+    RaceCase("stream upsert files", dir => SnapshotTable.commitStreamUpsertFiles(spark, dir,
+      stageFiles(dir, "staged-up", Seq(3L, 44L)), Seq("id"), batchId = 0L, appId = "up").get,
+      base ++ racer + 44L),
+    RaceCase("DV delete",
+      SnapshotTable.commitDeleteVectorsWhere(spark, _, col("id") === 4L), base ++ racer - 4L),
+    RaceCase("DV update", SnapshotTable.commitUpdateVectorsWhere(spark, _, col("id") === 4L,
+      Map("v" -> lit(-4L))), base ++ racer),
+    RaceCase("applyDeletes", SnapshotTable.applyDeletes(spark, _), base ++ racer - 3L,
+      setup = dir => {
+        SnapshotTable.commitAppend(idRows(0L until 5L), dir, statsCols = Seq("id"))
+        SnapshotTable.commitAppend(idRows(5L until 10L), dir)
+        SnapshotTable.commitDeleteMoR(Seq(3L).toDF("id"), dir, Seq("id"))
+      }))
+
+  test("race matrix: every retrying op loses one race to an append and republishes cleanly") {
+    raceCases.foreach { c =>
+      val dir = freshDir()
+      c.setup(dir)
+      val head = SnapshotTable.versions(spark, dir).last
+      val v = withRace(SnapshotTable.commitAppend(idRows(racer.toSeq.sorted), dir))(c.op(dir))
+      assert(v == head + 2, s"${c.name}: committed v$v, expected v${head + 2}")
+      assert(ids(SnapshotTable.read(spark, dir)).toSet == c.expected &&
+        SnapshotTable.read(spark, dir).count() == c.expected.size,
+        s"${c.name}: head rows ${ids(SnapshotTable.read(spark, dir))}")
+      assert(unreferenced(dir).isEmpty,
+        s"${c.name}: the lost attempt left files behind: ${unreferenced(dir)}")
+    }
+  }
+
+  test("race matrix: stream commits racing a RENAME fail loudly, as declared") {
+    Seq[(String, String => Any)](
+      "stream upsert" -> (dir => SnapshotTable.commitStreamUpsertMoR(
+        idRows(Seq(3L, 43L)), dir, Seq("id"), batchId = 0L)),
+      "stream sink files" -> (dir => SnapshotTable.commitStreamFiles(spark, dir,
+        stageFiles(dir, "staged-sink", Seq(42L)), batchId = 1L, appId = "sink"))
+    ).foreach { case (name, op) =>
+      val dir = freshDir()
+      SnapshotTable.commitAppend(idRows(0L until 5L), dir)
+      val boom = intercept[IllegalArgumentException] {
+        withRace(SnapshotTable.commitRenameColumn(spark, dir, "v", "w"))(op(dir))
+      }
+      assert(boom.getMessage.contains("raced a"), s"$name: ${boom.getMessage}")
+    }
+  }
+
+  test("a lost race to a commit that declares a new stats column republishes entries with its stat") {
+    // the racer widens the table's declarations; every op's new entries
+    // must carry the racer's column stat, not the stale first-head set
+    Seq[(String, String => Long)](
+      "append" -> (dir => SnapshotTable.commitAppend(idRows(Seq(20L)), dir)),
+      "stream sink files" -> (dir => SnapshotTable.commitStreamFiles(spark, dir,
+        stageFiles(dir, "staged-sink", Seq(42L)), batchId = 1L, appId = "sink").get),
+      "stream upsert" -> (dir => SnapshotTable.commitStreamUpsertMoR(
+        idRows(Seq(43L)), dir, Seq("id"), batchId = 0L).get),
+      "DV update" -> (dir => SnapshotTable.commitUpdateVectorsWhere(spark, dir,
+        col("id") === 4L, Map("v" -> lit(-4L))))
+    ).foreach { case (name, op) =>
+      val dir = freshDir()
+      SnapshotTable.commitAppend(idRows(0L until 5L), dir, statsCols = Seq("id"))
+      val v = withRace(SnapshotTable.commitAppend(
+        idRows(racer.toSeq.sorted), dir, statsCols = Seq("v")))(op(dir))
+      val m = SnapshotTable.readManifest(spark, dir, v)
+      assert(m.statsCols.toSet == Set("id", "v"), s"$name: ${m.statsCols}")
+      val fresh = m.entries.filter(_.seq == v)
+      assert(fresh.nonEmpty && fresh.forall(_.stats.contains("v")),
+        s"$name: new entries lack the racer's stat column: ${fresh.map(_.stats.keySet)}")
+    }
   }
 
   test("an append that loses a race to a RENAME rewrites its batch under the current name (ADVICE r11)") {

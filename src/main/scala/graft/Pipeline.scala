@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.{CompletableFuture, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -117,15 +118,9 @@ object Pipeline {
     spark.sparkContext.addSparkListener(pm)
     try {
       val a = body
-      // the listener bus is async: poll until the counters go quiet
-      // (the bus-draining API is private[spark])
-      var last = -1L
-      var spins = 0
-      while (spins < 50 && last != pm.jobsCompleted + pm.tasksCompleted) {
-        last = pm.jobsCompleted + pm.tasksCompleted
-        Thread.sleep(100)
-        spins += 1
-      }
+      // the listener bus is async: drain it so the counters hold every
+      // event of the body's jobs
+      GraftBus.drain(spark.sparkContext)
       (a, pm)
     } finally spark.sparkContext.removeSparkListener(pm)
   }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.sources.{Extraction, Ingest}
 import graft.sources.Ingest.DateWindow
-import org.apache.spark.GraftTestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Orchestration + extraction-config surface (SURVEY §2.10 C1-C3,
@@ -100,7 +100,7 @@ class PipelineSpec extends SparkSpec {
         Pipeline.Stage("one", () => { spark.range(10).count(); () }),
         Pipeline.Stage("two", () => { spark.range(20).count(); () }, Seq("one"))))
       assert(res.forall(_.error.isEmpty), res.mkString("; "))
-      GraftTestBus.drain(sc)
+      GraftBus.drain(sc)
       val tags = seen.asScala.toSeq
       assert(tags.map(_._1).toSet === Set("one", "two"), tags)
       // the tag lives on the stage threads only

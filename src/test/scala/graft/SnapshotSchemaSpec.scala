@@ -3,7 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.sources.SnapshotTable
-import org.apache.spark.GraftTestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -62,7 +62,7 @@ class SnapshotSchemaSpec extends SparkSpec {
     sc.setJobGroup(group, "plan-time job count")
     try {
       val a = body
-      GraftTestBus.drain(sc)
+      GraftBus.drain(sc)
       (a, seen.get)
     } finally {
       sc.clearJobGroup()

@@ -1537,16 +1537,19 @@ class SnapshotTableSpec extends SparkSpec {
       .filter(_.endsWith(".parquet")).map(n => s"$name/$n").toSeq
   }
 
-  /** One retrying op of the race matrix: `setup` builds the table (the
-    * default: ids 0..4 and 5..9 in two files, stats on id), `op` runs
-    * the op and returns its version, `expected` is the head's id set
-    * once the racer's rows (100, 101) landed first. */
+  /** The race matrix's default table: ids 0..4 and 5..9 in two
+    * files, stats on id. */
+  private def twoFiles(dir: String): Unit = {
+    SnapshotTable.commitAppend(idRows(0L until 5L), dir, statsCols = Seq("id"))
+    SnapshotTable.commitAppend(idRows(5L until 10L), dir)
+  }
+
+  /** One retrying op of the race matrix: `setup` builds the table, `op`
+    * runs the op and returns its version, `expected` is the head's id
+    * set once the racer's rows (100, 101) landed first. */
   private case class RaceCase(
       name: String, op: String => Long, expected: Set[Long],
-      setup: String => Unit = dir => {
-        SnapshotTable.commitAppend(idRows(0L until 5L), dir, statsCols = Seq("id"))
-        SnapshotTable.commitAppend(idRows(5L until 10L), dir)
-      })
+      setup: String => Unit = twoFiles)
 
   private val base = (0L until 10L).toSet
   private val racer = Set(100L, 101L)
@@ -1601,8 +1604,7 @@ class SnapshotTableSpec extends SparkSpec {
       Map("v" -> lit(-4L))), base ++ racer),
     RaceCase("applyDeletes", SnapshotTable.applyDeletes(spark, _), base ++ racer - 3L,
       setup = dir => {
-        SnapshotTable.commitAppend(idRows(0L until 5L), dir, statsCols = Seq("id"))
-        SnapshotTable.commitAppend(idRows(5L until 10L), dir)
+        twoFiles(dir)
         SnapshotTable.commitDeleteMoR(Seq(3L).toDF("id"), dir, Seq("id"))
       }))
 
